@@ -21,17 +21,21 @@ import org.apache.spark.SparkContext
   * cancel them — and blocking Spark actions can starve the shared global
   * pool if operators ever run concurrently. This helper uses a dedicated
   * 2-thread pool per call (the chains run for seconds; two short-lived
-  * threads are noise) and copies the caller's local properties onto the
-  * workers before either thunk runs. */
+  * threads are noise) and installs a private copy of the caller's local
+  * properties on each worker before its thunk runs. */
 private[graft] object Overlap {
 
   def both[A, B](sc: SparkContext)(fa: => A, fb: => B): (A, B) = {
-    val props = org.apache.spark.sql.graft.Bridge.cloneLocalProperties(sc)
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    def run[T](f: => T): Future[T] = Future {
-      org.apache.spark.sql.graft.Bridge.installLocalProperties(sc, props)
-      f
+    // one snapshot per chain, taken on the caller's thread: a shared
+    // instance would let one chain's setLocalProperty reach the other
+    def run[T](f: => T): Future[T] = {
+      val props = org.apache.spark.sql.graft.Bridge.cloneLocalProperties(sc)
+      Future {
+        org.apache.spark.sql.graft.Bridge.installLocalProperties(sc, props)
+        f
+      }
     }
     try {
       val af = run(fa)

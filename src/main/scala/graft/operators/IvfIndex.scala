@@ -234,15 +234,11 @@ object IvfIndex {
       // replaces — materialize before touching them
       .graftCheckpoint()
     val appended = merged.count() - current.count()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(modeKey)
-    s.conf.set(modeKey, "dynamic")
     // torn-window guard: the overwrite deletes files a pinned frame may
     // still reference mid-rewrite
     IndexVersion.beginMutation(indexDir, "append")
-    try merged.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/members")
-    finally prev.fold(s.conf.unset(modeKey))(s.conf.set(modeKey, _))
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cell").parquet(s"$indexDir/members")
     Seq(assigned, merged)
       .foreach(org.apache.spark.sql.graft.Bridge.releaseCheckpoint)
     IndexVersion.bump(indexDir) // refresh signal for serving sessions
@@ -427,14 +423,10 @@ object IvfIndex {
       val removed = current.count() - kept.count()
       val live = kept.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSet
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(modeKey)
-      s.conf.set(modeKey, "dynamic")
       // torn-window guard: overwrite + empty-cell purge are two steps
       IndexVersion.beginMutation(indexDir, "delete")
-      try kept.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/members")
-      finally prev.fold(s.conf.unset(modeKey))(s.conf.set(modeKey, _))
+      kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell").parquet(s"$indexDir/members")
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(kept)
       purgeEmptyCells(indexDir, touched.toSet, live)
       IndexVersion.bump(indexDir) // refresh signal for serving sessions
@@ -1032,14 +1024,10 @@ object IvfIndex {
         // EAGER: the rewrite deletes the very files being read (the
         // append-path hazard, same cure)
         .graftCheckpoint()
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(modeKey)
-      s.conf.set(modeKey, "dynamic")
       // torn-window guard: the rewrite deletes pinned frames' files
       IndexVersion.beginMutation(indexDir, "compact")
-      try merged.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/members")
-      finally prev.fold(s.conf.unset(modeKey))(s.conf.set(modeKey, _))
+      merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell").parquet(s"$indexDir/members")
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(merged)
       val after = frag.map(dataFiles).sum.toLong
       // refresh signal: a pinned serving frame would otherwise keep

@@ -109,20 +109,14 @@ object PostingsIndex {
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"),
         max(col("doc_id")).as("max_doc_id"))
 
-  private def writePartitioned(df: DataFrame, path: String, dynamic: Boolean): Unit = {
-    val spark = df.sparkSession
-    if (!dynamic) df.write.mode("overwrite").partitionBy("sb").parquet(path)
-    else {
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try df.write.mode("overwrite").partitionBy("sb").parquet(path)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
+  /** Overwrites `path` partitioned by `sb`: only the partitions `df`
+    * holds when `dynamic`, the whole directory otherwise. The mode rides
+    * on this write, never on the session, so concurrent writers (streaming
+    * `foreachBatch` appends) cannot see each other's choice. */
+  private def writePartitioned(df: DataFrame, path: String, dynamic: Boolean): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+      .partitionBy("sb").parquet(path)
 
   private[graft] def readSuperBits(s: SparkSession, indexDir: String): Int =
     s.read.parquet(s"$indexDir/meta").collect()(0).getAs[Long]("super_bits").toInt

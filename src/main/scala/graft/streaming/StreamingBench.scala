@@ -14,12 +14,12 @@ import graft.model.{AdEvent, Screen}
   *
   * The measured plans are the real streaming ones: partial HashAggregate →
   * shuffle → StateStore → final HashAggregate for the windowed aggs, a
-  * key-partitioned flatMapGroupsWithState / transformWithState store for
-  * the custom window, repeater, and lookup-cache join, and the symmetric
-  * stream-stream hash join state for the interval join. Events are
-  * generated in-order on the driver (the harness side, like Beam's
-  * TestStream), synthesized deterministically so the numbers are
-  * comparable across rounds.
+  * key-partitioned flatMapGroupsWithState store for the custom window and
+  * repeater, the same or a transformWithState store for the lookup-cache
+  * join, and the symmetric stream-stream hash join state for the interval
+  * join. Events are generated in-order on the driver (the harness side,
+  * like Beam's TestStream), synthesized deterministically so the numbers
+  * are comparable across rounds.
   */
 object StreamingBench {
 
@@ -527,9 +527,6 @@ object StreamingBench {
         }, "append", qn, batches, perBatch)),
       Leg("repeat", twsOnly = false, qn => throughputOf[(String, String, Timestamp)](spark,
         ds => Repeater.repeat(wm(ds), repeatIntervalMs, repeatTtlMs).toDF(),
-        values(50), "append", qn, batches, perBatch)),
-      Leg("repeat_tws", twsOnly = true, qn => throughputOf[(String, String, Timestamp)](spark,
-        ds => RepeaterProcessor.repeat(wm(ds), repeatIntervalMs, repeatTtlMs).toDF(),
         values(50), "append", qn, batches, perBatch)),
       Leg("lookup", twsOnly = false, qn => throughput2[(String, String, Timestamp), (String, String, Timestamp)](spark,
         (vs, ls) => LookupCacheJoin.join(vs, ls, lookupTtlMs, lookupWmDelay).toDF(),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{LookupCacheJoin, LookupCacheProcessor, Repeater, RepeaterProcessor}
+import graft.streaming.{LookupCacheJoin, LookupCacheProcessor, Repeater}
 
 /** Checkpoint-restart equivalence for the STATEFUL join/timer paths.
   *
@@ -16,13 +16,13 @@ import graft.streaming.{LookupCacheJoin, LookupCacheProcessor, Repeater, Repeate
   * (`IoMultimodalSpec`); this suite extends the guarantee to the two
   * operators that keep per-key state and event-time timers — the TTL
   * lookup-cache join (reference `LookupCacheDoFn`) and the repeater
-  * (reference `RepeatDoFn`) — on BOTH engines. Each scenario runs twice:
-  * once uninterrupted, once killed mid-scenario (with an in-flight
-  * uncommitted batch and more data arriving while the query is down) and
-  * restarted from its checkpoint. The recovered run must produce the
-  * byte-identical output set: buffered values, cached lookups, and armed
-  * timers all live in checkpointed state, so recovery must neither lose,
-  * duplicate, nor re-time any emission.
+  * (reference `RepeatDoFn`) — the join on both of its state engines.
+  * Each scenario runs twice: once uninterrupted, once killed mid-scenario
+  * (with an in-flight uncommitted batch and more data arriving while the
+  * query is down) and restarted from its checkpoint. The recovered run
+  * must produce the byte-identical output set: buffered values, cached
+  * lookups, and armed timers all live in checkpointed state, so recovery
+  * must neither lose, duplicate, nor re-time any emission.
   */
 class CheckpointRestartSpec extends AnyFunSuite {
 
@@ -102,17 +102,14 @@ class CheckpointRestartSpec extends AnyFunSuite {
     * data for the remaining ticks (through TTL expiry) arrives. Recovery
     * must fire the checkpointed event-time timers exactly as the
     * uninterrupted run does. */
-  private def repeatRun(tws: Boolean, interrupt: Boolean): Seq[(String, String, Long, Boolean)] = {
+  private def repeatRun(interrupt: Boolean): Seq[(String, String, Long, Boolean)] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = tmp(s"ckpt-repeat-$tws-$interrupt")
+    val dir = tmp(s"ckpt-repeat-$interrupt")
     val in = MemoryStream[(String, String, Timestamp)]
     def start() = {
       val ds = in.toDS().withWatermark("_3", "0 seconds").as[(String, String, Timestamp)]
-      val out =
-        if (tws) RepeaterProcessor.repeat(ds, minutes(10), minutes(30))
-        else Repeater.repeat(ds, minutes(10), minutes(30))
-      out.writeStream.format("parquet")
+      Repeater.repeat(ds, minutes(10), minutes(30)).writeStream.format("parquet")
         .option("path", s"$dir/out")
         .option("checkpointLocation", s"$dir/ckpt")
         .outputMode("append").start()
@@ -220,16 +217,13 @@ class CheckpointRestartSpec extends AnyFunSuite {
       "restarted interval join diverged from the uninterrupted run")
   }
 
-  for (tws <- Seq(true, false)) {
-    val engine = if (tws) "transformWithState" else "fMGWS"
-    test(s"repeater recovers its event-time timers from the checkpoint ($engine)") {
-      val clean = repeatRun(tws, interrupt = false)
-      // first emit at 12:00 + ticks 12:10/12:20 (before the kill window)
-      // and 12:30 = lastSeen+ttl (the expiry tick still emits) after it
-      assert(clean.map(_._3) === Seq(ts("12:00:00"), ts("12:10:00"),
-        ts("12:20:00"), ts("12:30:00")).map(_.getTime), s"unexpected ticks: $clean")
-      assert(repeatRun(tws, interrupt = true) === clean,
-        "restarted repeater diverged from the uninterrupted run")
-    }
+  test("repeater recovers its event-time timers from the checkpoint (fMGWS)") {
+    val clean = repeatRun(interrupt = false)
+    // first emit at 12:00 + ticks 12:10/12:20 (before the kill window)
+    // and 12:30 = lastSeen+ttl (the expiry tick still emits) after it
+    assert(clean.map(_._3) === Seq(ts("12:00:00"), ts("12:10:00"),
+      ts("12:20:00"), ts("12:30:00")).map(_.getTime), s"unexpected ticks: $clean")
+    assert(repeatRun(interrupt = true) === clean,
+      "restarted repeater diverged from the uninterrupted run")
   }
 }

@@ -100,12 +100,9 @@ class IvfIndexSpec extends AnyFunSuite {
     // fragmented and already-compact cells for the claims to bite
     val frag0 = spark.read.parquet(s"$idx/members")
       .where(col("cell") < 8).localCheckpoint()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try frag0.repartition(8).write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$idx/members")
-    finally prevMode.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
+    frag0.repartition(8).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cell").parquet(s"$idx/members")
     assert(contents() === rows, "fragmentation rewrite must be layout-only")
 
     val before = listing(idx)

@@ -232,12 +232,9 @@ class PostingsIndexSpec extends AnyFunSuite {
     // ~8-file slivers each, leaving sb=0 at the build's layout
     val frag0 = spark.read.parquet(s"$idx/postings")
       .where(col("sb") >= 1).localCheckpoint()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try frag0.repartition(8).write.mode("overwrite").partitionBy("sb")
-      .parquet(s"$idx/postings")
-    finally prevMode.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
+    frag0.repartition(8).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("sb").parquet(s"$idx/postings")
     assert(contents() === rows, "fragmentation rewrite must be layout-only")
 
     val before = listing()
@@ -645,12 +642,9 @@ class PostingsIndexSpec extends AnyFunSuite {
     // fragment termstats the way a long append history does (dynamic
     // overwrite rewrites the hot tail every batch)
     val frag = spark.read.parquet(s"$idx/termstats").localCheckpoint()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try frag.repartition(8).write.mode("overwrite").partitionBy("sb")
-      .parquet(s"$idx/termstats")
-    finally prev.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
+    frag.repartition(8).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("sb").parquet(s"$idx/termstats")
     assert(tsRows() === rows, "fragmentation rewrite must be layout-only")
     assert(tsFiles().values.exists(_ > 2), "termstats not fragmented")
 

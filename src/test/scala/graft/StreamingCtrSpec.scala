@@ -148,25 +148,15 @@ class StreamingCtrSpec extends AnyFunSuite {
 
   // -------------------------------------- custom merging ad-event window
 
-  /** Runs a scenario against BOTH custom-window engines (fMGWS and
-    * transformWithState), asserting identical pane output. */
+  /** Runs a scenario against the custom window, one micro-batch per
+    * input batch, and returns `screen1`'s panes in emission order. */
   private def runCustom(name: String, latenessMs: Long)(
-      batches: Seq[Seq[AdEvent]]): Seq[AdEventWindower.CtrPane] = {
-    val a = runCustomOn(name + "_fm", latenessMs, tws = false)(batches)
-    val b = runCustomOn(name + "_tw", latenessMs, tws = true)(batches)
-    assert(a === b, "flatMapGroupsWithState and transformWithState windowers disagree")
-    a
-  }
-
-  private def runCustomOn(name: String, latenessMs: Long, tws: Boolean)(
       batches: Seq[Seq[AdEvent]]): Seq[AdEventWindower.CtrPane] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
     val in = MemoryStream[AdEvent]
-    val out =
-      if (tws) graft.streaming.AdEventWindowProcessor.ctrByScreen(in.toDS(), latenessMs = latenessMs)
-      else AdEventWindower.ctrByScreen(in.toDS(), latenessMs = latenessMs)
+    val out = AdEventWindower.ctrByScreen(in.toDS(), latenessMs = latenessMs)
     val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }

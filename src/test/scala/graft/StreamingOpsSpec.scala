@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{LookupCacheJoin, LookupCacheProcessor, Repeater, RepeaterProcessor}
+import graft.streaming.{LookupCacheJoin, LookupCacheProcessor, Repeater}
 
 /** Streaming scenario specs for the two stateful operators, re-expressing the
   * reference's test suites
@@ -39,18 +39,9 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   // ---------------------------------------------------------------- Repeater
 
-  /** Runs a scenario against BOTH repeater engines (fMGWS and
-    * transformWithState), asserting identical observable output. */
+  /** Runs a scenario against the repeater and returns `screen1`'s
+    * emissions in emission order. */
   private def runRepeater(name: String, intervalMin: Int, ttlMin: Int)(
-      script: (MemoryStream[(String, String, Timestamp)], StreamingQuery) => Unit)
-      : Seq[Repeater.Repeated[String, String]] = {
-    val a = runRepeaterOn(name + "_fm", intervalMin, ttlMin, tws = false)(script)
-    val b = runRepeaterOn(name + "_tw", intervalMin, ttlMin, tws = true)(script)
-    assert(a === b, "flatMapGroupsWithState and transformWithState repeaters disagree")
-    a
-  }
-
-  private def runRepeaterOn(name: String, intervalMin: Int, ttlMin: Int, tws: Boolean)(
       script: (MemoryStream[(String, String, Timestamp)], StreamingQuery) => Unit)
       : Seq[Repeater.Repeated[String, String]] = {
     implicit val sqlCtx = spark.sqlContext
@@ -58,9 +49,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val in = MemoryStream[(String, String, Timestamp)]
     val ds = in.toDS().withWatermark("_3", "0 seconds").as[(String, String, Timestamp)]
-    val out =
-      if (tws) RepeaterProcessor.repeat(ds, minutes(intervalMin), minutes(ttlMin))
-      else Repeater.repeat(ds, minutes(intervalMin), minutes(ttlMin))
+    val out = Repeater.repeat(ds, minutes(intervalMin), minutes(ttlMin))
     val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       script(in, q)
