@@ -1,5 +1,8 @@
 package graft
 import scala.util.{Failure, Success, Try}
+
+import graft.sources.Corpus
+
 object Bench {
 
   /** One timed query execution: seconds + the error (if it threw). A failed
@@ -50,7 +53,7 @@ object Bench {
       spark.range(0, 2000000L, 1, 32)
         .selectExpr("id", "id % 97 as k", "cast(id as string) as s")
         .write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir).selectExpr("sum(k)", "max(s)").collect()
+      Corpus.read(spark, dir).selectExpr("sum(k)", "max(s)").collect()
       (System.nanoTime() - t0) / 1e9
     }
     val score = (1 to 3).map(_ => once()).min
@@ -83,7 +86,7 @@ object Bench {
     // Warm the session (JVM, codegen, parquet reader init) so the first
     // timed query doesn't absorb several seconds of one-time setup.
     spark.range(100000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
+    try Corpus.read(spark, s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // machine-speed score, measured JVM-warm before any suite runs —

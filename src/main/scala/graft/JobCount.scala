@@ -6,6 +6,8 @@ import scala.util.Try
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
+import graft.sources.Corpus
+
 /** Optimization-workflow tool: per-query DRIVER JOB COUNTS — the
   * fixed-cost evidence the round-16 serving-path work needs ("Done = job
   * count per affected query drops, log it"). Every Spark job carries
@@ -40,7 +42,7 @@ object JobCount {
     }
     // warm the session like Bench does
     spark.range(100000).selectExpr("sum(id)").collect()
-    Try(spark.read.parquet(s"$sfDir/region.parquet").count())
+    Try(Corpus.read(spark, s"$sfDir/region.parquet").count())
     println(f"${"query"}%-28s ${"cold_j"}%6s ${"cold_s"}%8s ${"warm_j"}%6s ${"warm_s"}%8s")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -98,8 +98,8 @@ object IvfIndex {
       .select(col("vec_id").as("cid"),
         transform(col("v"), x => x / col("nrm")).as("cv"))
     cb.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    val bc = broadcast(s.read.parquet(s"$indexDir/centroids"))
-    val bcb = broadcast(s.read.parquet(s"$indexDir/codebook"))
+    val bc = broadcast(Corpus.read(s, s"$indexDir/centroids"))
+    val bcb = broadcast(Corpus.read(s, s"$indexDir/codebook"))
     val assigned = withCodes(assignCells(e, bc), bcb)
     assigned.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$indexDir/members")
@@ -112,7 +112,7 @@ object IvfIndex {
     IndexFs.delete(s"$indexDir/_GRAFT_RETRAIN_INPROGRESS")
     IndexVersion.bump(indexDir)
     IndexVersion.endMutation(indexDir)
-    val m = s.read.parquet(s"$indexDir/members")
+    val m = Corpus.read(s, s"$indexDir/members")
     (m.select(col("cell")).distinct().count(), m.count())
   }
 
@@ -198,8 +198,8 @@ object IvfIndex {
     * partitions don't even get listed. Returns (cells touched, vectors
     * appended). */
   def append(s: SparkSession, indexDir: String, batch: DataFrame): (Long, Long) = {
-    val cents = broadcast(s.read.parquet(s"$indexDir/centroids"))
-    val cb = broadcast(s.read.parquet(s"$indexDir/codebook"))
+    val cents = broadcast(Corpus.read(s, s"$indexDir/centroids"))
+    val cb = broadcast(Corpus.read(s, s"$indexDir/codebook"))
     // within-batch dedup FIRST: an at-least-once ingest can deliver the
     // same vec_id twice in one increment, and the index-side anti-join
     // below would admit both copies permanently. Duplicate deliveries
@@ -215,7 +215,7 @@ object IvfIndex {
     val tombDir = s"$indexDir/deleted"
     val e =
       if (IndexFs.isDirectory(tombDir))
-        e0.join(s.read.parquet(tombDir), Seq("vec_id"), "left_anti")
+        e0.join(Corpus.read(s, tombDir), Seq("vec_id"), "left_anti")
       else e0
     // frozen quantizer AND frozen codebook: an appended vector gets the
     // cell and the codes a from-scratch build would give it
@@ -223,7 +223,7 @@ object IvfIndex {
       .graftCheckpoint() // two consumers (touched-cell list + merge)
     val touched = assigned.select(col("cell")).distinct()
       .collect().map(_.getInt(0)) // bounded by nCells
-    val current = s.read.parquet(s"$indexDir/members")
+    val current = Corpus.read(s, s"$indexDir/members")
       .where(col("cell").isin(touched.map(Integer.valueOf): _*))
     val fresh = assigned
       .join(current.select(col("vec_id")), Seq("vec_id"), "left_anti")
@@ -402,11 +402,11 @@ object IvfIndex {
     val tombDir = s"$indexDir/deleted"
     val fresh =
       if (IndexFs.isDirectory(tombDir))
-        del.join(s.read.parquet(tombDir), Seq("vec_id"), "left_anti")
+        del.join(Corpus.read(s, tombDir), Seq("vec_id"), "left_anti")
       else del
     if (fresh.limit(1).count() > 0)
       fresh.coalesce(1).write.mode("append").parquet(tombDir)
-    val touched = s.read.parquet(s"$indexDir/members")
+    val touched = Corpus.read(s, s"$indexDir/members")
       .select(col("vec_id"), col("cell"))
       .join(del, Seq("vec_id"))
       .select(col("cell")).distinct()
@@ -414,7 +414,7 @@ object IvfIndex {
     val out = if (touched.isEmpty) (0L, 0L)
     else {
       val cells = touched.map(Integer.valueOf).toSeq
-      val current = s.read.parquet(s"$indexDir/members")
+      val current = Corpus.read(s, s"$indexDir/members")
         .where(col("cell").isin(cells: _*))
       val kept = current.join(del, Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("v"), col("nrm"), col("codes"), col("cell"))
@@ -587,7 +587,7 @@ object IvfIndex {
     // set is whole (pre-swap or fully post-swap, never a mix), so the
     // recomputation below sees consistent rows either way
     completeRetrainSwap(indexDir)
-    val members = s.read.parquet(s"$indexDir/members")
+    val members = Corpus.read(s, s"$indexDir/members")
       .select(col("vec_id"), col("v"), col("nrm"),
         col("codes").as("old_codes"), col("cell").as("old_cell"))
       // EAGER: the table writes below replace files this frame reads
@@ -628,8 +628,8 @@ object IvfIndex {
           .select(col("cid"),
             transform(col("cv"), x => x / col("cn")).as("cv"))
     cb.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    val bc = broadcast(s.read.parquet(s"$indexDir/centroids"))
-    val bcb = broadcast(s.read.parquet(s"$indexDir/codebook"))
+    val bc = broadcast(Corpus.read(s, s"$indexDir/centroids"))
+    val bcb = broadcast(Corpus.read(s, s"$indexDir/codebook"))
     val reassigned = withCodes(
         assignCells(members.select(col("vec_id"), col("v"), col("nrm")), bc), bcb)
       .join(members.select(col("vec_id"), col("old_codes"), col("old_cell")),
@@ -772,9 +772,9 @@ object IvfIndex {
     * cell, never a cross join. A memberless index is vacuously fit
     * (nothing to re-train), not an NPE. */
   private[graft] def assignmentFit(s: SparkSession, indexDir: String): Double = {
-    val cents = broadcast(s.read.parquet(s"$indexDir/centroids")
+    val cents = broadcast(Corpus.read(s, s"$indexDir/centroids")
       .select(col("cid").cast("int").as("cell"), col("cv"), col("cn")))
-    s.read.parquet(s"$indexDir/members")
+    Corpus.read(s, s"$indexDir/members")
       .join(cents, Seq("cell"))
       .agg(coalesce(avg(dot(col("v"), col("cv")) / (col("nrm") * col("cn"))),
         lit(1.0)))
@@ -797,7 +797,7 @@ object IvfIndex {
     * (falls back to the legacy absolute floor). */
   private def storedFit(s: SparkSession, indexDir: String): Option[Double] =
     if (!IndexFs.isDirectory(s"$indexDir/fitstats")) None
-    else s.read.parquet(s"$indexDir/fitstats").collect()
+    else Corpus.read(s, s"$indexDir/fitstats").collect()
       .headOption.map(_.getDouble(0))
 
   /** The self-calibrating drift floor: this fraction of the stored
@@ -956,7 +956,7 @@ object IvfIndex {
         s"($cells cells rewritten, $movedN members moved)"
     }
     // parquet footer row count — no data pages read
-    val nVec = s.read.parquet(s"$indexDir/members").count()
+    val nVec = Corpus.read(s, s"$indexDir/members").count()
     val standing = nCells
     val resize = plannedResize(nVec, standing)
     if (resize.isDefined) {
@@ -1018,7 +1018,7 @@ object IvfIndex {
     else {
       val ids = frag.map(_.split('/').last.stripPrefix("cell=").toInt)
       val before = frag.map(dataFiles).sum.toLong
-      val merged = s.read.parquet(s"$indexDir/members")
+      val merged = Corpus.read(s, s"$indexDir/members")
         .where(col("cell").isin(ids.map(Integer.valueOf): _*))
         .repartition(col("cell"))
         // EAGER: the rewrite deletes the very files being read (the
@@ -1068,8 +1068,8 @@ object IvfIndex {
       nProbe: Int = 2,
       k: Int = 5): DataFrame = {
     requireNotRetraining(indexDir)
-    queryOn(s.read.parquet(s"$indexDir/centroids"),
-      s.read.parquet(s"$indexDir/members"), queries, nProbe, k)
+    queryOn(Corpus.read(s, s"$indexDir/centroids"),
+      Corpus.read(s, s"$indexDir/members"), queries, nProbe, k)
   }
 
   /** [[query]] against already-constructed centroid/member frames — the
@@ -1130,7 +1130,7 @@ object IvfIndex {
       // perfectly valid codes iff its stored dimension matches — probe
       // ONE bounded centroids row and stamp the marker so the probe
       // never re-runs; only a genuine dimension mismatch still fails
-      val d = s.read.parquet(s"$indexDir/centroids")
+      val d = Corpus.read(s, s"$indexDir/centroids")
         .orderBy(col("cid").asc).limit(1)
         .select(size(col("cv")).as("d")).collect().headOption.map(_.getInt(0))
       require(d.contains(pqDim),
@@ -1142,18 +1142,18 @@ object IvfIndex {
     val q = queries
       .select(col("query_id"), vec(col("qv")).as("qv"))
       .withColumn("qn", norm(col("qv")))
-    val cents = broadcast(s.read.parquet(s"$indexDir/centroids"))
+    val cents = broadcast(Corpus.read(s, s"$indexDir/centroids"))
     val probes = probesOf(q, cents, nProbe)
       .select(col("query_id"), col("cell"))
     // the query-side ADC table: M x pqK quantized subspace distances per
     // query, from the frozen codebook — bounded, broadcast; the
     // single-sourced [[Similarity.pqCells]] tree
-    val cb = broadcast(s.read.parquet(s"$indexDir/codebook"))
+    val cb = broadcast(Corpus.read(s, s"$indexDir/codebook"))
     val qn0 = q.select(col("query_id"),
       transform(col("qv"), x => x / col("qn")).as("nv"))
     val qtab = Similarity.pqCells(qn0, "query_id", cb)
       .select(col("query_id"), col("m"), col("cid"), col("qd2"))
-    val members = s.read.parquet(s"$indexDir/members")
+    val members = Corpus.read(s, s"$indexDir/members")
     // ADC pass: (cell, vec_id, codes) only — the embedding column is
     // never decoded here
     val adc = members

@@ -119,7 +119,7 @@ object PostingsIndex {
       .partitionBy("sb").parquet(path)
 
   private[graft] def readSuperBits(s: SparkSession, indexDir: String): Int =
-    s.read.parquet(s"$indexDir/meta").collect()(0).getAs[Long]("super_bits").toInt
+    Corpus.read(s, s"$indexDir/meta").collect()(0).getAs[Long]("super_bits").toInt
 
   /** [[maintain]]'s rebucket plan as a pure function of the standing
     * layout — shared with [[Router.advise]] so the advisory surface can
@@ -190,7 +190,7 @@ object PostingsIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
     IndexVersion.bump(indexDir)
     IndexVersion.endMutation(indexDir)
-    val p = s.read.parquet(s"$indexDir/postings")
+    val p = Corpus.read(s, s"$indexDir/postings")
     (p.select(col("sb")).distinct().count(), p.count())
   }
 
@@ -213,7 +213,7 @@ object PostingsIndex {
     * separately-trusted counter exists to drift. */
   def append(s: SparkSession, indexDir: String, incoming: DataFrame): (Long, Long) = {
     val superBits = readSuperBits(s, indexDir)
-    val wm = s.read.parquet(s"$indexDir/blockstats")
+    val wm = Corpus.read(s, s"$indexDir/blockstats")
       .agg(coalesce(max(col("max_doc_id")), lit(-1L))).collect()(0).getLong(0)
     // tombstone guard: an id taken down BEFORE it was ever ingested
     // (above-watermark [[delete]]) must stay out when its batch arrives
@@ -222,7 +222,7 @@ object PostingsIndex {
     val batch0 = incoming.where(col("doc_id") > wm)
     val batch =
       (if (IndexFs.isDirectory(tombDir))
-        batch0.join(s.read.parquet(tombDir), Seq("doc_id"), "left_anti")
+        batch0.join(Corpus.read(s, tombDir), Seq("doc_id"), "left_anti")
       else batch0).graftCheckpoint()
     val batchStats = blockStatsOf(batch, superBits).graftCheckpoint()
     val touched = batchStats.select(col("sb")).distinct()
@@ -230,7 +230,7 @@ object PostingsIndex {
     if (touched.isEmpty) (0L, 0L)
     else {
       val sbs = touched.map(Integer.valueOf)
-      val existing = s.read.parquet(s"$indexDir/postings")
+      val existing = Corpus.read(s, s"$indexDir/postings")
         .where(col("sb").isin(sbs: _*))
         .select(col("term"), col("block"), col("plist"))
       // watermark-disjoint sides make concat+sort exact; the distinct is
@@ -260,7 +260,7 @@ object PostingsIndex {
       // watermark advances last; the batch's rows are watermark-new, so
       // dropDuplicates only fires on a replay (identical rows — the same
       // role array_distinct plays in the plist merge)
-      val posMerged = s.read.parquet(s"$indexDir/positions")
+      val posMerged = Corpus.read(s, s"$indexDir/positions")
         .where(col("sb").isin(sbs: _*))
         .unionByName(positionsStateOf(batch, superBits))
         .dropDuplicates(Seq("term", "doc_id"))
@@ -270,14 +270,14 @@ object PostingsIndex {
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(posMerged)
       // norms file: same touched-partition merge, dropDuplicates the
       // replay guard (one row per doc)
-      val dlMerged = s.read.parquet(s"$indexDir/doclens")
+      val dlMerged = Corpus.read(s, s"$indexDir/doclens")
         .where(col("sb").isin(sbs: _*))
         .unionByName(doclensStateOf(batch, superBits))
         .dropDuplicates(Seq("doc_id"))
         .graftCheckpoint()
       writePartitioned(dlMerged, s"$indexDir/doclens", dynamic = true)
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(dlMerged)
-      val statsMerged = s.read.parquet(s"$indexDir/blockstats")
+      val statsMerged = Corpus.read(s, s"$indexDir/blockstats")
         .where(col("sb").isin(sbs: _*))
         .select(col("sb"), col("n_docs"), col("total_len"), col("max_doc_id"))
         .unionByName(batchStats)
@@ -406,7 +406,7 @@ object PostingsIndex {
       else {
         val ids = frag.map(_.split('/').last.stripPrefix("sb=").toInt)
         val before = frag.map(dataFiles).sum.toLong
-        val merged = s.read.parquet(path)
+        val merged = Corpus.read(s, path)
           .where(col("sb").isin(ids.map(Integer.valueOf): _*))
           .repartition(col("sb"))
           // sb FIRST: the partitionBy writer requires ordering by the
@@ -497,13 +497,13 @@ object PostingsIndex {
     IndexVersion.requireNoMutation(indexDir, "rebucket")
     recoverRebucket(indexDir)
     val oldBits = readSuperBits(s, indexDir)
-    val oldSb = s.read.parquet(s"$indexDir/blockstats").count()
+    val oldSb = Corpus.read(s, s"$indexDir/blockstats").count()
     if (oldBits == newSuperBits) return (oldSb, oldSb)
     import s.implicits._
     val bb = Retrieval.postingsBlockBits
     val next = s"$indexDir.next"
     rmDirTree(next)
-    val state = s.read.parquet(s"$indexDir/postings")
+    val state = Corpus.read(s, s"$indexDir/postings")
       .select(col("term"), col("block"), col("plist"),
         shiftright(col("block"), newSuperBits).cast("int").as("sb"))
       // EAGER + two consumers (postings write, termstats re-derivation)
@@ -518,7 +518,7 @@ object PostingsIndex {
     // models its absence) — re-tag it only where it exists
     if (IndexFs.isDirectory(s"$indexDir/positions"))
       writePartitioned(
-        s.read.parquet(s"$indexDir/positions")
+        Corpus.read(s, s"$indexDir/positions")
           .select(col("doc_id"), col("term"), col("positions"),
             sbOf(col("doc_id")).as("sb")),
         s"$next/positions", dynamic = false)
@@ -528,13 +528,13 @@ object PostingsIndex {
     require(IndexFs.isDirectory(s"$indexDir/doclens"),
       s"$indexDir predates the doclens norms table: rebuild it with the " +
         "current buildFrom before rebucket")
-    val doclens = s.read.parquet(s"$indexDir/doclens")
+    val doclens = Corpus.read(s, s"$indexDir/doclens")
       .select(col("doc_id"), col("dl"), sbOf(col("doc_id")).as("sb"))
     writePartitioned(doclens, s"$next/doclens", dynamic = false)
     val counts = doclens.groupBy(col("sb"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"),
         max(col("doc_id")).as("doc_max"))
-    val wms = s.read.parquet(s"$indexDir/blockstats")
+    val wms = Corpus.read(s, s"$indexDir/blockstats")
       .select(sbOf(col("max_doc_id")).as("sb"), col("max_doc_id"))
       .groupBy(col("sb")).agg(max(col("max_doc_id")).as("wm"))
     val bs = counts.join(wms, Seq("sb"), "full_outer")
@@ -548,10 +548,10 @@ object PostingsIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$next/meta")
     recoverTombstones(indexDir)
     if (IndexFs.isDirectory(s"$indexDir/tombstones"))
-      s.read.parquet(s"$indexDir/tombstones").coalesce(1)
+      Corpus.read(s, s"$indexDir/tombstones").coalesce(1)
         .write.parquet(s"$next/tombstones")
     IndexVersion.bump(next) // fresh stamp: serving refreshes
-    val newSb = s.read.parquet(s"$next/blockstats").count()
+    val newSb = Corpus.read(s, s"$next/blockstats").count()
     // commit point — from here recovery only moves directories. The two
     // renames REQUIRE IndexFs.rename's atomic whole-tree contract; an
     // object-store binding must manifest-commit instead (IndexFs scaladoc)
@@ -597,7 +597,7 @@ object PostingsIndex {
     IndexVersion.requireNoMutation(indexDir, "maintain")
     recoverRebucket(indexDir)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    val row = s.read.parquet(s"$indexDir/blockstats")
+    val row = Corpus.read(s, s"$indexDir/blockstats")
       .agg(count(lit(1)), coalesce(max(col("max_doc_id")), lit(0L)))
       .collect()(0)
     val nSb = row.getLong(0)
@@ -714,7 +714,7 @@ object PostingsIndex {
   def delete(s: SparkSession, indexDir: String, ids: DataFrame): (Long, Long) = {
     val superBits = readSuperBits(s, indexDir)
     val del = ids.select(col("doc_id")).distinct().graftCheckpoint()
-    val wm = s.read.parquet(s"$indexDir/blockstats")
+    val wm = Corpus.read(s, s"$indexDir/blockstats")
       .agg(coalesce(max(col("max_doc_id")), lit(-1L))).collect()(0).getLong(0)
     val above = del.where(col("doc_id") > wm)
     if (above.limit(1).count() > 0) {
@@ -731,7 +731,7 @@ object PostingsIndex {
       // [[vacuumTombstones]]'s job, via a staged swap.
       val fresh =
         if (IndexFs.isDirectory(tombDir))
-          above.join(s.read.parquet(tombDir), Seq("doc_id"), "left_anti")
+          above.join(Corpus.read(s, tombDir), Seq("doc_id"), "left_anti")
         else above
       if (fresh.limit(1).count() > 0)
         fresh.coalesce(1).write.mode("append").parquet(tombDir)
@@ -752,10 +752,10 @@ object PostingsIndex {
       (0L, 0L)
     } else {
       val sbs = touched.map(Integer.valueOf).toSeq
-      val before = s.read.parquet(s"$indexDir/postings")
+      val before = Corpus.read(s, s"$indexDir/postings")
         .where(col("sb").isin(sbs: _*))
         .select(explode(col("plist"))).count()
-      val kept = s.read.parquet(s"$indexDir/postings")
+      val kept = Corpus.read(s, s"$indexDir/postings")
         .where(col("sb").isin(sbs: _*))
         .select(col("term"), col("block"), col("sb"),
           explode(col("plist")).as("e"))
@@ -776,7 +776,7 @@ object PostingsIndex {
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(kept)
       purgeEmptyPartitions(s"$indexDir/postings", touched, liveSbs)
       purgeEmptyPartitions(s"$indexDir/termstats", touched, liveSbs)
-      val posKept = s.read.parquet(s"$indexDir/positions")
+      val posKept = Corpus.read(s, s"$indexDir/positions")
         .where(col("sb").isin(sbs: _*))
         .join(del, Seq("doc_id"), "left_anti")
         .graftCheckpoint()
@@ -785,7 +785,7 @@ object PostingsIndex {
       writePartitioned(posKept, s"$indexDir/positions", dynamic = true)
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(posKept)
       purgeEmptyPartitions(s"$indexDir/positions", touched, posLive)
-      val dlKept = s.read.parquet(s"$indexDir/doclens")
+      val dlKept = Corpus.read(s, s"$indexDir/doclens")
         .where(col("sb").isin(sbs: _*))
         .join(del, Seq("doc_id"), "left_anti")
         .graftCheckpoint()
@@ -794,7 +794,7 @@ object PostingsIndex {
       writePartitioned(dlKept, s"$indexDir/doclens", dynamic = true)
       // blockstats: survivors' counts, the standing watermark — the row
       // persists at n_docs = 0 so the superblock stays non-ingestable
-      val statsNew = s.read.parquet(s"$indexDir/blockstats")
+      val statsNew = Corpus.read(s, s"$indexDir/blockstats")
         .where(col("sb").isin(sbs: _*))
         .select(col("sb"), col("max_doc_id"))
         .join(dlKept.groupBy(col("sb"))
@@ -843,11 +843,11 @@ object PostingsIndex {
     val tombDir = s"$indexDir/tombstones"
     if (!IndexFs.isDirectory(tombDir)) (0L, 0L)
     else {
-      val wm = s.read.parquet(s"$indexDir/blockstats")
+      val wm = Corpus.read(s, s"$indexDir/blockstats")
         .agg(coalesce(max(col("max_doc_id")), lit(-1L))).collect()(0).getLong(0)
       // EAGER: the staged write replaces the files being read only after
       // the swap, but the count + write double-consume the scan
-      val t = s.read.parquet(tombDir).graftCheckpoint()
+      val t = Corpus.read(s, tombDir).graftCheckpoint()
       val kept = t.where(col("doc_id") > wm)
       val total = t.count()
       val keptN = kept.count()
@@ -878,7 +878,7 @@ object PostingsIndex {
   def query(
       s: SparkSession, indexDir: String,
       terms: Seq[String] = Retrieval.queryTerms): DataFrame = {
-    val tf = s.read.parquet(s"$indexDir/postings")
+    val tf = Corpus.read(s, s"$indexDir/postings")
       .where(col("term").isin(terms: _*))
       .select(col("term").as("token"), explode(col("plist")).as("e"))
       .select(col("e.doc_id").as("doc_id"), col("e.dl").as("dl"),
@@ -888,7 +888,7 @@ object PostingsIndex {
   }
 
   private def globalStats(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(s"$indexDir/blockstats")
+    Corpus.read(s, s"$indexDir/blockstats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_len")).as("total_len"))
 
   /** Score the docs of `sbs` only: a STATICALLY pruned partition scan of
@@ -906,11 +906,11 @@ object PostingsIndex {
     // blockstats (r16: two scans + a groupBy + two broadcasts off every
     // WAND scoring job)
     val dfTF = dfT.getOrElse(
-      s.read.parquet(s"$indexDir/termstats")
+      Corpus.read(s, s"$indexDir/termstats")
         .where(col("term").isin(terms: _*))
         .groupBy(col("term")).agg(sum(col("df_sb")).as("df"))
         .select(col("term").as("token"), col("df")))
-    val tf = s.read.parquet(s"$indexDir/postings")
+    val tf = Corpus.read(s, s"$indexDir/postings")
       .where(col("sb").isin(sbs.map(Integer.valueOf): _*) &&
         col("term").isin(terms: _*))
       .select(col("term").as("token"), explode(col("plist")).as("e"))
@@ -956,7 +956,7 @@ object PostingsIndex {
     // expression tree, which is unchanged — only its input relation
     // moved). Also returned: the df/stats LOCAL relations, so neither
     // the bootstrap nor the final scoring job re-scans the stats tables.
-    val rows = s.read.parquet(s"$indexDir/termstats")
+    val rows = Corpus.read(s, s"$indexDir/termstats")
       .where(col("term").isin(terms: _*))
       .select(col("term"), col("sb").cast("int").as("sb"),
         col("max_tf").cast("long").as("max_tf"),
@@ -1071,7 +1071,7 @@ object PostingsIndex {
       s: SparkSession, indexDir: String, qt: DataFrame, k: Int,
       maxTerms: Int = Retrieval.mltProfileTerms): DataFrame = {
     import s.implicits._
-    val termstats = s.read.parquet(s"$indexDir/termstats")
+    val termstats = Corpus.read(s, s"$indexDir/termstats")
     // informative-term selection (the Lucene MoreLikeThis discipline):
     // keep each query's `maxTerms` LOWEST-df profile terms (rarest =
     // highest idf = most informative; ties by token — a total order both
@@ -1100,7 +1100,7 @@ object PostingsIndex {
     val rows = termstats.where(col("term").isin(allTerms: _*))
       .select(col("term"), col("df_sb").cast("long").as("df_sb"),
         lit(0L).as("tl"))
-      .unionByName(s.read.parquet(s"$indexDir/blockstats")
+      .unionByName(Corpus.read(s, s"$indexDir/blockstats")
         .agg(coalesce(sum(col("n_docs")), lit(0L)).as("df_sb"),
           coalesce(sum(col("total_len")), lit(0L)).as("tl"))
         .select(lit(null).cast("string").as("term"), col("df_sb"), col("tl")))
@@ -1115,7 +1115,7 @@ object PostingsIndex {
     // a local relation so the scoring DAG never re-scans termstats
     val dfT = selected.map(_._2).distinct
       .map(t => (t, dfByTerm(t))).toDF("term", "df")
-    bm25BatchOn(s.read.parquet(s"$indexDir/postings"), dfT, globals,
+    bm25BatchOn(Corpus.read(s, s"$indexDir/postings"), dfT, globals,
       prof, selected.map(_._2).distinct, k, excludeSelf = true)
       .select(col("query_id"), col("doc_id").as("neighbor_id"), col("r"))
   }
@@ -1283,7 +1283,7 @@ object PostingsIndex {
   private[graft] def phrasePositionalOn(
       s: SparkSession, idx: String,
       phrases: Seq[Seq[String]] = Retrieval.gatePhrases): DataFrame = {
-    val toks = s.read.parquet(s"$idx/positions")
+    val toks = Corpus.read(s, s"$idx/positions")
       .where(col("term").isin(phrases.flatten.distinct: _*))
       .select(col("doc_id"), lit(null).cast("int").as("pid"),
         explode(col("positions")).as("pos"), col("term").as("token"))
@@ -1318,12 +1318,12 @@ object PostingsIndex {
     * bites where term support concentrates. */
   private[graft] def nearPositionalOn(s: SparkSession, idx: String): DataFrame = {
     val (ta, tb) = Retrieval.nearTerms
-    val sbs = s.read.parquet(s"$idx/termstats")
+    val sbs = Corpus.read(s, s"$idx/termstats")
       .where(col("term").isin(ta, tb))
       .groupBy(col("sb")).agg(count_distinct(col("term")).as("nt"))
       .where(col("nt") === 2)
       .select(col("sb")).collect().map(_.getInt(0)).sorted
-    val toks = s.read.parquet(s"$idx/positions")
+    val toks = Corpus.read(s, s"$idx/positions")
       .where(col("sb").isin(sbs.map(Integer.valueOf).toSeq: _*) &&
         col("term").isin(ta, tb))
       .select(col("doc_id"), explode(col("positions")).as("pos"),
@@ -1347,7 +1347,7 @@ object PostingsIndex {
       val needTf = p.distinct.foldLeft(lit(Long.MaxValue)) { (acc, t) =>
         when(col("term") === t, lit(mult(t))).otherwise(acc)
       }
-      s.read.parquet(s"$idx/postings")
+      Corpus.read(s, s"$idx/postings")
         .where(col("term").isin(p.distinct: _*))
         .select(col("term"), explode(col("plist")).as("e"))
         .where(col("e.tf") >= needTf)
@@ -1389,7 +1389,7 @@ object PostingsIndex {
       IndexFs.createMarker(s"$idx/_GRAFT_DELETED")
     }
     Retrieval.serializePostings(
-      s.read.parquet(s"$idx/postings").select(col("term"), col("block"), col("plist")))
+      Corpus.read(s, s"$idx/postings").select(col("term"), col("block"), col("plist")))
   }
 
   private[graft] def ensureLifecycleIndex(s: SparkSession, dir: String): String = {

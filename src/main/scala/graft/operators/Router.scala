@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Corpus
+
 /** Stats-driven index/path routing: ONE user-facing entry point per
   * scan/index twin family that picks the leg itself, from stored index
   * stats plus a static cost model — the [[RangeJoin.autoBandWidth]]
@@ -268,7 +270,7 @@ object Router {
           "cast(id as bigint) as df")
         .write.mode("overwrite").partitionBy("sb").parquet(dir)
       val ms = timeMs {
-        s.read.parquet(dir).where(col("term") === "t")
+        Corpus.read(s, dir).where(col("term") === "t")
           .agg(sum(col("df"))).collect(); ()
       }
       (nSb.toLong, ms)
@@ -339,14 +341,14 @@ object Router {
   /** Corpus token count from the postings index's blockstats — the
     * index carries its own ANALYZE. */
   private[graft] def totalLenOf(s: SparkSession, pidx: String): Long =
-    s.read.parquet(s"$pidx/blockstats")
+    Corpus.read(s, s"$pidx/blockstats")
       .agg(coalesce(sum(col("total_len")), lit(0L))).collect()(0).getLong(0)
 
   /** Σ df over the probe terms from the stored termstats — a
     * term-pruned, superblock-count-bounded read. */
   private[graft] def sumDfOf(
       s: SparkSession, pidx: String, terms: Seq[String]): Long =
-    s.read.parquet(s"$pidx/termstats")
+    Corpus.read(s, s"$pidx/termstats")
       .where(col("term").isin(terms: _*))
       .agg(coalesce(sum(col("df_sb")), lit(0L))).collect()(0).getLong(0)
 
@@ -357,7 +359,7 @@ object Router {
     * [[PostingsIndex.plannedRebucket]]). */
   private[graft] def postingsMetaOf(
       s: SparkSession, pidx: String): (Long, Long, Long) = {
-    val r = s.read.parquet(s"$pidx/blockstats")
+    val r = Corpus.read(s, s"$pidx/blockstats")
       .agg(coalesce(sum(col("total_len")), lit(0L)), count(lit(1)),
         coalesce(max(col("max_doc_id")), lit(0L)))
       .collect()(0)
@@ -367,8 +369,8 @@ object Router {
   /** (nVec, nCells) from the IVF index — parquet footer row counts, no
     * data pages read. */
   private[graft] def ivfMetaOf(s: SparkSession, vidx: String): (Long, Long) =
-    (s.read.parquet(s"$vidx/members").count(),
-      s.read.parquet(s"$vidx/centroids").count())
+    (Corpus.read(s, s"$vidx/members").count(),
+      Corpus.read(s, s"$vidx/centroids").count())
 
   // ---- choice cache: one probe set per index version ----
 

@@ -874,7 +874,7 @@ object Sketches {
   }
 
   private def stateMeta(s: SparkSession, stateDir: String): (String, Long) = {
-    val r = s.read.parquet(s"$stateDir/meta").collect()(0)
+    val r = Corpus.read(s, s"$stateDir/meta").collect()(0)
     (r.getString(0), r.getLong(1))
   }
 
@@ -913,11 +913,11 @@ object Sketches {
       return 0L
     }
     val newWm = fresh.agg(max(col("l_orderkey"))).collect()(0).getLong(0)
-    val regs = s.read.parquet(s"$stateDir/registers")
+    val regs = Corpus.read(s, s"$stateDir/registers")
       .unionByName(stateRegistersOf(fresh, mode))
       .groupBy(col("col_name"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"), max(col("max_rho")).as("max_rho"))
-    val bounds = s.read.parquet(s"$stateDir/bounds")
+    val bounds = Corpus.read(s, s"$stateDir/bounds")
       .unionByName(statsBoundsOf(fresh))
       .groupBy(col("col_name"))
       .agg(min(col("min_num")).as("min_num"), max(col("max_num")).as("max_num"),
@@ -940,7 +940,7 @@ object Sketches {
     * estimator expression every ANALYZE path uses. */
   def statsStateFinalize(s: SparkSession, stateDir: String): DataFrame = {
     recoverStateSwap(stateDir)
-    val regs = s.read.parquet(s"$stateDir/registers")
+    val regs = Corpus.read(s, s"$stateDir/registers")
     val s0 = sum(when(col("bucket").isNotNull, pow(lit(2.0), -col("max_rho"))))
     val nb = sum(when(col("bucket").isNotNull, 1L).otherwise(0L))
     val base = regs.groupBy(col("col_name")).agg(
@@ -948,7 +948,7 @@ object Sketches {
       coalesce(sum(when(col("bucket").isNull, col("cnt"))), lit(0L)).as("n_nulls"),
       s0.as("s0"), nb.as("nb"))
     finalizeStatsCols(
-      base.join(broadcast(s.read.parquet(s"$stateDir/bounds")), Seq("col_name")))
+      base.join(broadcast(Corpus.read(s, s"$stateDir/bounds")), Seq("col_name")))
   }
 
   /** Move a standing state to a different hash mode: ONE corpus rescan

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver's parquet corpus (TESTDATA.md / FIXTURES.md §B).
   *
@@ -9,11 +10,69 @@ import org.apache.spark.sql.functions._
   * columns into the scan, which is the Spark-native equivalent of the
   * reference's BigQuery Storage-API `rowRestriction` + typed column pruning
   * (`/root/reference/.../bigquery/TypedBigQueryStorage.scala:14-16`).
+  *
+  * Every parquet read in the library goes through [[read]], which infers
+  * a path's schema once and declares it on later reads — the reference's
+  * typed reads take their schema from the case class and never infer one.
+  * A bare `spark.read.parquet(path)` launches a one-task job to read a
+  * footer on EVERY call, even when the files have not changed.
   */
 object Corpus {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** SQL confs that change the schema parquet inference returns — part of
+    * the memo's stamp, so flipping one re-infers. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** path → (stamp, inferred schema); one entry per distinct path, a
+    * miss overwrites the path's old entry. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Seq[Option[String]]), StructType)]()
+
+  /** `spark.read.parquet(path)` with the schema inference memoized.
+    *
+    * The memo keys on the path and is stamped with [[fingerprint]] (the
+    * recursive listing's names, lengths and mtimes) plus the current
+    * values of the inference confs. The listing is in the stamp because
+    * an index directory is rewritten in place — a rewrite that adds a
+    * column, or a new partition directory whose value changes an
+    * inferred partition-column type, must re-infer. On a hit the read
+    * declares the cached schema and runs no Spark job; the file listing
+    * itself stays fresh on every read. The price is one listing walk
+    * per read (one `listStatus` per directory, so a few RPCs on a remote
+    * filesystem) against the one-task inference job it replaces.
+    *
+    * Nothing is cached until a plain read succeeds, so a missing path or
+    * an empty directory throws exactly as `spark.read.parquet` does. A
+    * path with no [[graft.operators.IndexFs]] binding (an object store)
+    * cannot be fingerprinted and always takes the plain read. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val fp =
+      try Some(fingerprint(path))
+      catch { case _: IllegalArgumentException => None } // no binding
+    fp match {
+      case None => spark.read.parquet(path)
+      case Some(f) =>
+        val stamp = (f, inferenceConfs.map(spark.conf.getOption))
+        val hit = schemas.get(path)
+        if (hit != null && hit._1 == stamp)
+          spark.read.schema(hit._2).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          schemas.put(path, (stamp, df.schema))
+          df
+        }
+    }
+  }
 
   /** Content fingerprint of a parquet table path — stable iff the data is.
     *
@@ -26,7 +85,8 @@ object Corpus {
     * length, mtime) over every data file (dotfiles/_SUCCESS markers
     * excluded), so both the single-file and the directory layout
     * fingerprint correctly. Shared by every derived-artifact cache keyed
-    * on a corpus table (the trained quality weights, the IVF index tag). */
+    * on a corpus table (the trained quality weights, the IVF index tag)
+    * and by the schema memo of [[read]]. */
   def fingerprint(path: String): Long = {
     import graft.operators.IndexFs
     // one listStatus per directory (the IndexFs contract: name, length,
@@ -106,8 +166,11 @@ object Corpus {
     // events.parquet carries TIMESTAMP(NANOS), which Spark rejects unless
     // this legacy flag is on. It is a runtime-settable SQL conf — set it
     // defensively so callers with a plain session (e.g. a smoke harness)
-    // work too.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // work too, but only when it is off: this runs inside concurrent
+    // Overlap chains, and GraftSession sessions never need the write. The
+    // set must precede the read, whose memo stamp includes this conf.
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    if (!s.conf.getOption(nanos).contains("true")) s.conf.set(nanos, "true")
     normalizeTs(table(s, d, "events"))
   }
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")

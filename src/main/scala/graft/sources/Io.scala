@@ -219,7 +219,7 @@ object Io {
     val files = math.max(
       spark.sparkContext.defaultParallelism,
       math.ceil(bytes.toDouble / targetBytes).toInt)
-    layout(spark.read.parquet(inPath), files).write.mode("overwrite").parquet(outPath)
+    layout(Corpus.read(spark, inPath), files).write.mode("overwrite").parquet(outPath)
     outFs.listStatus(outQ)
       .count(s => s.getPath.getName.endsWith(".parquet"))
   }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.IndexVersion
+import graft.sources.Corpus
 
 /** Session-pinned index frames with the per-trigger staleness check —
   * the serving loops' ONE refresh kernel ([[StreamAnnServe]],
@@ -79,7 +80,7 @@ private[graft] final class PinnedIndex(
       val cur = IndexVersion.stamp(indexDir)
       if (runHook) onRefresh()
       val fresh =
-        try Some(tables.map(t => t -> s.read.parquet(s"$indexDir/$t")).toMap)
+        try Some(tables.map(t => t -> Corpus.read(s, s"$indexDir/$t")).toMap)
         catch {
           case _: org.apache.spark.sql.AnalysisException => None // mid-swap
         }

@@ -36,15 +36,24 @@ object Bridge {
       sc: org.apache.spark.SparkContext, p: java.util.Properties): Unit =
     sc.setLocalProperties(p)
 
-  /** Frees the storage blocks behind a `localCheckpoint()`ed frame.
-    * `Dataset.unpersist` only talks to the CacheManager, which knows
-    * nothing about checkpoint RDDs — their blocks otherwise live until
-    * the ContextCleaner GCs the RDD reference. No-op on non-checkpoint
-    * plans. */
+  /** Frees what a `graftCheckpoint()`ed frame holds: the storage blocks
+    * of a local checkpoint and, in reliable mode, its `rdd-*` files in
+    * the checkpoint dir. `Dataset.unpersist` only talks to the
+    * CacheManager, which knows nothing about checkpoint RDDs — their
+    * blocks otherwise live until the ContextCleaner GCs the RDD
+    * reference, and reliable files (`cleanCheckpoints` is off by
+    * default) would pile up one set per checkpointed round. The files
+    * are deleted through Hadoop, not `IndexFs`, because a checkpoint dir
+    * may sit on an object store, which `IndexFs` refuses. No-op on
+    * non-checkpoint plans. */
   def releaseCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false): Unit
+        lr.rdd.unpersist(blocking = false)
+        lr.rdd.getCheckpointFile.foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(lr.rdd.context.hadoopConfiguration).delete(p, true)
+        }
       case _ => ()
     }
 }

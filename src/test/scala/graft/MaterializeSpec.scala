@@ -69,6 +69,41 @@ class MaterializeSpec extends AnyFunSuite {
     }
   }
 
+  test("reliable mode: releaseCheckpoint deletes the released rdd-* files") {
+    val dir = Files.createTempDirectory("graft_reliable_release").toString
+    spark.conf.set(Materialize.modeKey, "reliable")
+    spark.conf.set(Materialize.dirKey, dir)
+    def ckptFile(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.analyzed
+        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+        .rdd.getCheckpointFile.get
+    def exists(f: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
+    try {
+      // a checkpoint-per-round loop: each round checkpoints the next
+      // frame from the current one, then releases the current one
+      var cur = Materialize.checkpoint(spark.range(100).toDF("id"))
+      val released = (1 to 3).map { _ =>
+        val next = Materialize.checkpoint(cur.select((col("id") + 1).as("id")))
+        val f = ckptFile(cur)
+        assert(exists(f), s"reliable checkpoint must write $f")
+        org.apache.spark.sql.graft.Bridge.releaseCheckpoint(cur)
+        cur = next
+        f
+      }
+      assert(cur.agg(sum(col("id"))).collect()(0).getLong(0) === 4950L + 300L)
+      val left = released.filter(exists)
+      assert(left.isEmpty, s"released checkpoint files remain:\n${left.mkString("\n")}")
+      org.apache.spark.sql.graft.Bridge.releaseCheckpoint(cur)
+    } finally {
+      spark.conf.unset(Materialize.modeKey)
+      spark.conf.unset(Materialize.dirKey)
+      graft.operators.IndexFs.deleteTree(dir)
+    }
+  }
+
   test("source audit: no operator calls localCheckpoint() directly") {
     // the seam is only a seam if every site goes through it
     val root = Paths.get("src/main/scala/graft")
