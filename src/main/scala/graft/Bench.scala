@@ -245,11 +245,13 @@ object Bench {
     // ledger comparison can drift. The full per-query NAME map cannot
     // fit any 2000-char archive at 160 queries (~3.8 KB of names alone);
     // q is positional over sorted(SparkEntry.queries.keys) — the
-    // CORRECTNESS artifact's key set (README "Bench artifact").
+    // CORRECTNESS artifact's key set (README "Bench artifact"). Its own
+    // metric name, `total_echo`, keeps a consumer that takes the last
+    // `"metric":"total"` line from mistaking the echo for the full line.
     // error MESSAGES stay on the contract line only — a many-error run
     // would push this line past the tail window; the count is enough to
     // say "go read the full line"
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"echo":true,"n_queries":${results.size},"error_count":${errors.size},"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"q":$qArr,"value":$total}""")
+    println(s"""{"metric":"total_echo","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"echo":true,"n_queries":${results.size},"error_count":${errors.size},"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"q":$qArr,"value":$total}""")
     spark.stop()
   }
 }

@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   * partitions default to the cluster's setting unless `shufflePartitions`
   * is given (the local harnesses pass the core count; at 100 TB you'd size
   * it to data volume, not cores).
+  *
+  * `builder` also sizes Spark's compiled-class cache
+  * (`spark.sql.codegen.cache.maxEntries` = 4096; the reasoning and the
+  * measurements sit at the setting). It is a static conf: the first
+  * session built in a JVM fixes the cache size for every later one.
   */
 object GraftSession {
 
@@ -62,6 +67,29 @@ object GraftSession {
       // still bounding per-task buffer memory. Scale-independent: the
       // bound comes from the algorithm's register space, not the corpus.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
+      // Compiled-class cache: Spark keeps every Janino-compiled class
+      // (whole-stage, projections, orderings) in one JVM-wide LRU keyed on
+      // (context class loader, generated source), so each whole-stage
+      // class is held twice — once for the up-front compile in
+      // WholeStageCodegenExec.doExecute on the planning thread, once under
+      // the executor task threads' session class loader. One pass of the
+      // benchmark's workloads needs ~270 (batch_queries), ~520
+      // (index_lifecycle) and ~200 (stream_ingest) entries; the default
+      // 100 evicts each class before the next pass asks for it again, so
+      // every repeated plan shape re-ran Janino (~1/5 of the on-CPU Java
+      // samples of a timed batch pass). 4096 is sized from a measurement:
+      // one JVM running all 160 queries twice (JobCount at sf0.001)
+      // compiles ~2,400 classes, all still cached at the end; NMT there
+      // shows +22 MB committed metaspace (of it +5 MB class space) against
+      // the default size.
+      // Plans that inline a changing literal (watermarks, isin lists)
+      // still compile on each run; no cache size helps them.
+      // STATIC conf: the cache is sized once, when Spark's CodeGenerator
+      // is first used in the JVM, so the first session built fixes it and
+      // later sessions' values are ignored. Measured in local mode only;
+      // executors on a cluster (one cache per executor JVM) were not
+      // checked.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
     val b1 = master.fold(b)(m => b.master(m))
     shufflePartitions.fold(b1)(n => b1.config("spark.sql.shuffle.partitions", n.toString))
   }

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.sources.Corpus
@@ -19,8 +20,12 @@ import graft.sources.Corpus
   * For each declared query (filtered by SPARK_GRAFT_ONLY): run the
   * noop-sink write twice (cold pass absorbs one-time ensure/build work
   * and choice-cache probes; the WARM pass is the steady state the bench's
-  * min-of-2 reports), count jobs per pass via a listener, and print one
-  * line per query: `name cold_jobs cold_sec warm_jobs warm_sec`.
+  * min-of-2 reports), count jobs per pass via a listener and Janino
+  * compiles per pass via Spark's `CodegenMetrics`, and print one line per
+  * query: `name cold_jobs cold_compiles cold_sec warm_jobs warm_compiles
+  * warm_sec`. A query with warm compiles > 0 recompiles on every run: its
+  * plan inlines a literal that changes between runs (a watermark, an
+  * `isin` list), so the class cache cannot serve it.
   *
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY. */
 object JobCount {
@@ -36,28 +41,31 @@ object JobCount {
         jobs.incrementAndGet(); ()
       }
     })
-    def drained(): Int = {
+    // (jobs, compiles) so far; compiles run on the planning thread and on the
+    // local executor's task threads, all in this JVM
+    def drained(): (Int, Long) = {
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-      jobs.get()
+      (jobs.get(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
     }
     // warm the session like Bench does
     spark.range(100000).selectExpr("sum(id)").collect()
     Try(Corpus.read(spark, s"$sfDir/region.parquet").count())
-    println(f"${"query"}%-28s ${"cold_j"}%6s ${"cold_s"}%8s ${"warm_j"}%6s ${"warm_s"}%8s")
+    println(f"${"query"}%-28s ${"cold_j"}%6s ${"cold_c"}%6s ${"cold_s"}%8s ${"warm_j"}%6s ${"warm_c"}%6s ${"warm_s"}%8s")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        def pass(): (Int, Double) = {
-          val j0 = drained()
+        def pass(): (Int, Long, Double) = {
+          val (j0, c0) = drained()
           val t0 = System.nanoTime()
           val r = Try(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
           val sec = (System.nanoTime() - t0) / 1e9
           r.failed.foreach(e => println(s"  [$name] ERR: ${e.getMessage}"))
-          (drained() - j0, sec)
+          val (j1, c1) = drained()
+          (j1 - j0, c1 - c0, sec)
         }
-        val (cj, cs) = pass()
-        val (wj, ws) = pass()
-        println(f"$name%-28s $cj%6d $cs%8.3f $wj%6d $ws%8.3f")
+        val (cj, cc, cs) = pass()
+        val (wj, wc, ws) = pass()
+        println(f"$name%-28s $cj%6d $cc%6d $cs%8.3f $wj%6d $wc%6d $ws%8.3f")
       }
     spark.stop()
   }

@@ -34,7 +34,9 @@ import org.apache.spark.sql.Dataset
   * PRE-materialization formatted plan (with a call-site label), which the
   * dump appends after the executed plan — so the evidence shows the real
   * operators. Recording is a plain thread-local flag: off (the default)
-  * it costs one thread-local read per checkpoint call. */
+  * it costs one thread-local read per checkpoint call. [[Overlap]] carries
+  * the caller's buffer to its worker threads, so two chains may append to
+  * one buffer at once (in completion order); appends lock the buffer. */
 object Materialize {
 
   private[graft] val modeKey = "spark.graft.checkpoint.mode"
@@ -52,7 +54,17 @@ object Materialize {
   private[graft] def drainRecording(): Seq[(String, String)] = {
     val buf = recorder.get()
     recorder.remove()
-    if (buf == null) Seq.empty else buf.toSeq
+    if (buf == null) Seq.empty else buf.synchronized(buf.toSeq)
+  }
+
+  /** This thread's recording buffer, or null when it is not recording. */
+  private[graft] def recording: ArrayBuffer[(String, String)] = recorder.get()
+
+  /** Runs `f` with `buf` (from [[recording]] on another thread) as this
+    * thread's buffer; a null `buf` runs `f` unrecorded. */
+  private[graft] def recordingInto[T](buf: ArrayBuffer[(String, String)])(f: => T): T = {
+    recorder.set(buf)
+    try f finally recorder.remove()
   }
 
   def checkpoint[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
@@ -63,7 +75,8 @@ object Materialize {
         .map(e => s"${e.getClassName.stripPrefix("graft.operators.")}.${e.getMethodName}:${e.getLineNumber}")
         .getOrElse("<unknown site>")
       val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-      buf += ((label, ds.queryExecution.explainString(mode)))
+      val plan = ds.queryExecution.explainString(mode)
+      buf.synchronized { buf += ((label, plan)) }
     }
     val spark = ds.sparkSession
     if (spark.conf.get(modeKey, "local") == "reliable") {

@@ -22,7 +22,9 @@ import org.apache.spark.SparkContext
   * pool if operators ever run concurrently. This helper uses a dedicated
   * 2-thread pool per call (the chains run for seconds; two short-lived
   * threads are noise) and installs a private copy of the caller's local
-  * properties on each worker before its thunk runs. */
+  * properties on each worker before its thunk runs. The caller's
+  * [[Materialize]] plan recorder, if on, is shared with both workers, so
+  * checkpoints taken inside either chain reach [[PlanDump]]. */
 private[graft] object Overlap {
 
   def both[A, B](sc: SparkContext)(fa: => A, fb: => B): (A, B) = {
@@ -32,9 +34,10 @@ private[graft] object Overlap {
     // instance would let one chain's setLocalProperty reach the other
     def run[T](f: => T): Future[T] = {
       val props = org.apache.spark.sql.graft.Bridge.cloneLocalProperties(sc)
+      val rec = Materialize.recording
       Future {
         org.apache.spark.sql.graft.Bridge.installLocalProperties(sc, props)
-        f
+        Materialize.recordingInto(rec)(f)
       }
     }
     try {

@@ -900,7 +900,11 @@ object Dedup {
     // 11.87 vs 13.8–15.1 s, new tree worse) — the family's per-query
     // floor is Catalyst planning + codegen + the contraction compute,
     // not job scheduling, so job-count cuts here buy nothing locally
-    // and AQE-off leans negative. Kept as-was; don't re-try.
+    // and AQE-off leans negative. Kept as-was; don't re-try. The codegen
+    // part of that floor was recompilation: Spark's 100-entry class cache
+    // thrashed, so every run re-ran Janino on the same plan shapes.
+    // GraftSession now sizes the cache to 4096 and a repeat run compiles
+    // (almost) nothing; what remains is planning and the compute.
     val conf = s.conf
     val prevParts = conf.get("spark.sql.shuffle.partitions")
     try {

@@ -31,4 +31,18 @@ class OverlapSpec extends AnyFunSuite {
       assert(sc.getLocalProperty("k") === null, "a chain's property leaked into the caller")
     } finally sc.setLocalProperty("overlap.caller", null)
   }
+
+  test("Overlap.both: checkpoints taken in either chain reach the caller's plan recorder") {
+    import Materialize._
+    val spark = SparkTestSession.spark
+    startRecording()
+    // drained unconditionally, so a failure cannot leave this thread recording
+    val counts = scala.util.Try(Overlap.both(sc)(
+      spark.range(10).selectExpr("id * 2 AS a").graftCheckpoint().count(),
+      spark.range(10).selectExpr("id * 3 AS b").graftCheckpoint().count()))
+    val recorded = drainRecording()
+    assert(counts.get === ((10L, 10L)))
+    assert(recorded.size === 2, "a chain's checkpoint escaped the recorder")
+    assert(recorded.forall { case (label, plan) => label.nonEmpty && plan.contains("Range") })
+  }
 }
