@@ -83,12 +83,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val tsMs = System.currentTimeMillis()
     val loadStart = loadavg()
-    // Warm the session (JVM, codegen, parquet reader init) so the first
-    // timed query doesn't absorb several seconds of one-time setup.
-    spark.range(100000).selectExpr("sum(id)").collect()
-    try Corpus.read(spark, s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    SparkEntry.warmUp(spark, sfDir)
+    val only = SparkEntry.onlyFromEnv
     // machine-speed score, measured JVM-warm before any suite runs —
     // full runs only (like the streaming/bucketed/relayout sections): a
     // SPARK_GRAFT_ONLY dev iteration shouldn't pay 3 calibration rounds
@@ -118,8 +114,7 @@ object Bench {
     // evaluates and discards every row — the cost a real consumer pays —
     // with no driver collect. One-time ledger re-baseline documented in
     // BASELINE.md ("Honest bench re-baseline").
-    def runOnce(dir: String): Seq[(String, Timed)] = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    def runOnce(dir: String): Seq[(String, Timed)] = SparkEntry.selected(only)
       .map { case (name, fn) =>
         val t0 = System.nanoTime()
         val err = Try(fn(spark, dir).write.format("noop").mode("overwrite").save()) match {
@@ -165,6 +160,9 @@ object Bench {
       if (errors.isEmpty) ""
       else s""","error_count":${errors.size},"errors":${errors.mkString("{", ",", "}")}"""
     val total = r3(results.map(_._2.sec).sum)
+    // each pass's own sum next to the per-query-min `value`: a pass
+    // poisoned by a degrading heap shows on its own
+    val passTotals = Seq(cold, warm).map(p => r3(p.map(_._2.sec).sum)).mkString("[", ",", "]")
     // Bucketed-join amortization split (round-2 verdict, Wrong #3): the
     // bucketed_join_revenue query entry memoizes its layout, so min-of-2
     // already reports the amortized join; this section times the two halves
@@ -232,7 +230,7 @@ object Bench {
     // carries the same data. (r8: the streaming block — cut from every
     // driver artifact through r7 — moved behind the map too; it fits
     // the tail alongside q/loadavg/value.)
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"queries":$qs$streaming$bucketed$relayout$errJson,"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"q":$qArr,"value":$total}""")
+    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"queries":$qs$streaming$bucketed$relayout$errJson,"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"pass_totals":$passTotals,"q":$qArr,"value":$total}""")
     // COMPACT ECHO LINE (round-16 verdict, Next #2): every BENCH_r*.json
     // the driver has archived carries `parsed: null`, because the driver
     // parses only a 2000-char TAIL slice of stdout and the full contract
@@ -251,7 +249,7 @@ object Bench {
     // error MESSAGES stay on the contract line only — a many-error run
     // would push this line past the tail window; the count is enough to
     // say "go read the full line"
-    println(s"""{"metric":"total_echo","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"echo":true,"n_queries":${results.size},"error_count":${errors.size},"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"q":$qArr,"value":$total}""")
+    println(s"""{"metric":"total_echo","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"echo":true,"n_queries":${results.size},"error_count":${errors.size},"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"pass_totals":$passTotals,"q":$qArr,"value":$total}""")
     spark.stop()
   }
 }

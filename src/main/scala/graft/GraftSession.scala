@@ -78,7 +78,7 @@ object GraftSession {
       // 100 evicts each class before the next pass asks for it again, so
       // every repeated plan shape re-ran Janino (~1/5 of the on-CPU Java
       // samples of a timed batch pass). 4096 is sized from a measurement:
-      // one JVM running all 160 queries twice (JobCount at sf0.001)
+      // one JVM running all 160 queries twice (QueryProfile at sf0.001)
       // compiles ~2,400 classes, all still cached at the end; NMT there
       // shows +22 MB committed metaspace (of it +5 MB class space) against
       // the default size.

@@ -24,7 +24,8 @@ import org.apache.spark.SparkContext
   * threads are noise) and installs a private copy of the caller's local
   * properties on each worker before its thunk runs. The caller's
   * [[Materialize]] plan recorder, if on, is shared with both workers, so
-  * checkpoints taken inside either chain reach [[PlanDump]]. */
+  * checkpoints taken inside either chain reach [[QueryProfile]]'s plan
+  * files. */
 private[graft] object Overlap {
 
   def both[A, B](sc: SparkContext)(fa: => A, fb: => B): (A, B) = {

@@ -12,9 +12,7 @@ object Verify {
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selected(only).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -38,7 +36,7 @@ object Verify {
     // Similarity.clustersForCount for the k-means/semdedup k), so their
     // oracles must be sized for THIS sf dir, not the static map's
     // sf0.01-shaped values — at sf1 the near-dup mismatch used to require
-    // a manual PrintNearDupSql swap before running check_par.py. One
+    // a manual oracle-SQL swap before running check_par.py. One
     // cheap count here removes that step for all three; at sf0.01 the
     // generated SQL is byte-identical to the static entries.
     val sizedSql: Map[String, String] =

@@ -28,8 +28,8 @@ import graft.sources.Corpus
   */
 object Dedup {
 
-  private[graft] val numMinhash = 8   // minhash functions
-  private[graft] val bandSize = 2     // → 4 LSH bands
+  private val numMinhash = 8   // minhash functions
+  private val bandSize = 2     // → 4 LSH bands
 
   // the ONE canonical scala-side tokenizer lives in TextAnalysis
   private def normTokens(text: String): Array[String] =
@@ -894,7 +894,7 @@ object Dedup {
 
     // MEASURED NON-WIN (r16): disabling AQE inside this loop + dropping
     // the entity family's single-consumer result checkpoints cut the
-    // family's driver-job count in HALF (JobCount: entity_incremental
+    // family's driver-job count in HALF (QueryProfile: entity_incremental
     // 56 → 30, entity_resolution 32 → 16 jobs) and did NOT move
     // wall-clock (warm 4.44 → 4.40 / 2.13 → 2.58 s; subset bench pairs
     // 11.87 vs 13.8–15.1 s, new tree worse) — the family's per-query

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Materialize.MaterializeOps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Corpus
@@ -451,11 +451,11 @@ object PostingsIndex {
     * leaves ~9 ms of file-open cost per tiny partition, and the
     * term-pruned scan LOSES to a linear corpus scan — 2.6 s vs 1.7 s at
     * the sf1 gate index; re-laid out at superBits=8 it wins again at
-    * 0.5 s, `SbSizeProbe`). The Lucene analog is a forceMerge: an
-    * unavoidable full-index rewrite (every row's partition changes),
-    * amortized over every query after — and the one the stats-driven
-    * router ([[Router.decideBm25]]'s per-superblock term) tells you to
-    * schedule.
+    * 0.5 s, measured by a superblock-size sweep). The Lucene analog is
+    * a forceMerge: an unavoidable full-index rewrite (every row's
+    * partition changes), amortized over every query after — and the one
+    * the stats-driven router ([[Router.decideBm25]]'s per-superblock
+    * term) tells you to schedule.
     *
     * Rows are layout-invariant: postings keep (term, block, plist) —
     * block is doc-id-derived, unchanged — and only the sb tag
@@ -919,6 +919,44 @@ object PostingsIndex {
     Retrieval.bm25ScoreWith(tf, stats.getOrElse(globalStats(s, indexDir)), dfTF, k)
   }
 
+  /** What [[termStatsProbe]] returns: the term-pruned `termstats` rows
+    * (term, sb INT, max_tf, min_dl, df_sb BIGINT), each term's exact
+    * global df and the index's global (n_docs, total_len). */
+  private final case class TermStats(
+      rows: Array[Row], dfByTerm: Map[String, Long], nDocs: Long, totalLen: Long) {
+    /** The globals as the 1-row (n_docs, total_len) local relation the
+      * scoring epilogue takes in place of a blockstats aggregate. */
+    def globals(s: SparkSession): DataFrame = {
+      import s.implicits._
+      Seq((nDocs, totalLen)).toDF("n_docs", "total_len")
+    }
+  }
+
+  /** The ONE postings-stats round-trip WAND selection and more-like-this
+    * share (r16): the term-pruned `termstats` rows of `terms` and the
+    * 1-row global stats from `blockstats` arrive in one union'd collect
+    * (the stats row rides with term = NULL). df is then a driver-side
+    * BIGINT sum of df_sb per term — an order-free integer fold, bit-equal
+    * to the SQL aggregate it replaces — over ≤ |terms|·superblocks rows. */
+  private def termStatsProbe(
+      s: SparkSession, indexDir: String, terms: Seq[String]): TermStats = {
+    val rows = Corpus.read(s, s"$indexDir/termstats")
+      .where(col("term").isin(terms: _*))
+      .select(col("term"), col("sb").cast("int").as("sb"),
+        col("max_tf").cast("long").as("max_tf"),
+        col("min_dl").cast("long").as("min_dl"),
+        col("df_sb").cast("long").as("df_sb"))
+      .unionByName(globalStats(s, indexDir)
+        .select(lit(null).cast("string").as("term"), lit(-1).as("sb"),
+          coalesce(col("n_docs"), lit(0L)).as("max_tf"),
+          coalesce(col("total_len"), lit(0L)).as("min_dl"),
+          lit(0L).as("df_sb")))
+      .collect()
+    val (statsRows, tRows) = rows.partition(_.isNullAt(0))
+    TermStats(tRows, tRows.groupMapReduce(_.getString(0))(_.getLong(4))(_ + _),
+      statsRows.head.getLong(2), statsRows.head.getLong(3))
+  }
+
   /** WAND superblock selection: which partitions can possibly hold a
     * top-`k` document? Returns (selected sbs, all sbs with query terms).
     *
@@ -945,38 +983,22 @@ object PostingsIndex {
     import s.implicits._
     // ONE bounded probe round-trip (r16, verdict Next #1): the old shape
     // ran a tiny checkpoint + a three-broadcast grouped collect — ~0.7 s
-    // of fixed cost on ≤ |terms|·superblocks rows (WandPhaseProbe). The
-    // term-pruned termstats rows and the 1-row global stats now arrive in
-    // one union'd collect (the stats row rides with term = NULL), and the
-    // old DAG's arithmetic happens either on the driver over exact
-    // BIGINTs (df sums, per-sb UBq sums, min-docs maxes — order-free
-    // integer folds, bit-equal to the SQL aggregates they replace) or
-    // through the SAME shared Catalyst tree evaluated over a local
-    // relation (ubq = qScoreCol: the WAND soundness argument rides the
-    // expression tree, which is unchanged — only its input relation
-    // moved). Also returned: the df/stats LOCAL relations, so neither
+    // of fixed cost on ≤ |terms|·superblocks rows (round-16 phase
+    // measurement, VERDICT.md item 3). The stats now arrive in one
+    // collect ([[termStatsProbe]]), and the old DAG's arithmetic happens
+    // either on the driver over exact BIGINTs (df sums, per-sb UBq sums,
+    // min-docs maxes — order-free integer folds, bit-equal to the SQL
+    // aggregates they replace) or through the SAME shared Catalyst tree
+    // evaluated over a local relation (ubq = qScoreCol: the WAND
+    // soundness argument rides the expression tree, which is unchanged —
+    // only its input relation moved). Also returned: the df/stats LOCAL relations, so neither
     // the bootstrap nor the final scoring job re-scans the stats tables.
-    val rows = Corpus.read(s, s"$indexDir/termstats")
-      .where(col("term").isin(terms: _*))
-      .select(col("term"), col("sb").cast("int").as("sb"),
-        col("max_tf").cast("long").as("max_tf"),
-        col("min_dl").cast("long").as("min_dl"),
-        col("df_sb").cast("long").as("df_sb"))
-      .unionByName(globalStats(s, indexDir)
-        .select(lit(null).cast("string").as("term"), lit(-1).as("sb"),
-          coalesce(col("n_docs"), lit(0L)).as("max_tf"),
-          coalesce(col("total_len"), lit(0L)).as("min_dl"),
-          lit(0L).as("df_sb")))
-      .collect()
-    val (statsRows, tRows) = rows.partition(_.isNullAt(0))
-    val nDocs = statsRows.head.getLong(2)
-    val totalLen = statsRows.head.getLong(3)
-    // exact global df per term: a driver-side BIGINT sum of df_sb
-    val dfByTerm = tRows.groupMapReduce(_.getString(0))(_.getLong(4))(_ + _)
+    val ts @ TermStats(tRows, dfByTerm, nDocs, totalLen) =
+      termStatsProbe(s, indexDir, terms)
     // per-(term, sb) quantized upper bound via the SHARED expression tree
     // over a local relation — no exchange, no broadcast
     val ubqRows =
-      if (tRows.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      if (tRows.isEmpty) Array.empty[Row]
       else tRows.toSeq
         .map(r => (r.getInt(1), r.getLong(4), r.getLong(2), r.getLong(3),
           dfByTerm(r.getString(0)), nDocs, totalLen))
@@ -991,7 +1013,7 @@ object PostingsIndex {
       }
       .toArray
     val dfT = dfByTerm.toSeq.toDF("token", "df")
-    val statsF = Seq((nDocs, totalLen)).toDF("n_docs", "total_len")
+    val statsF = ts.globals(s)
     val byBound = perSb.sortBy(r => (-r._2, r._1))
     // bootstrap: the best-bounded prefix guaranteed to hold ≥ k docs
     val cum = byBound.scanLeft(0L)(_ + _._3).tail
@@ -1071,7 +1093,6 @@ object PostingsIndex {
       s: SparkSession, indexDir: String, qt: DataFrame, k: Int,
       maxTerms: Int = Retrieval.mltProfileTerms): DataFrame = {
     import s.implicits._
-    val termstats = Corpus.read(s, s"$indexDir/termstats")
     // informative-term selection (the Lucene MoreLikeThis discipline):
     // keep each query's `maxTerms` LOWEST-df profile terms (rarest =
     // highest idf = most informative; ties by token — a total order both
@@ -1092,23 +1113,12 @@ object PostingsIndex {
     // returns ≤ profile-terms × superblocks rows (both query-bounded —
     // hundreds), so a groupBy here bought exactness nothing and cost a
     // full shuffle round-trip on the serving path (measured ~0.4 s of
-    // hybrid_rrf_indexed's latency at sf0.1). The 1-row global stats ride
-    // the SAME collect (term = NULL row — the wandSelect union trick,
-    // r16), so the scoring DAG no longer scans + aggregates + broadcasts
-    // blockstats per execution; the sums are the identical BIGINTs,
-    // collected once and handed down as a local relation.
-    val rows = termstats.where(col("term").isin(allTerms: _*))
-      .select(col("term"), col("df_sb").cast("long").as("df_sb"),
-        lit(0L).as("tl"))
-      .unionByName(Corpus.read(s, s"$indexDir/blockstats")
-        .agg(coalesce(sum(col("n_docs")), lit(0L)).as("df_sb"),
-          coalesce(sum(col("total_len")), lit(0L)).as("tl"))
-        .select(lit(null).cast("string").as("term"), col("df_sb"), col("tl")))
-      .collect()
-    val (statsRows, tRows) = rows.partition(_.isNullAt(0))
-    val dfByTerm = tRows.groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
-    val globals = Seq((statsRows.head.getLong(1), statsRows.head.getLong(2)))
-      .toDF("n_docs", "total_len")
+    // hybrid_rrf_indexed's latency at sf0.1). The global stats ride the
+    // SAME collect ([[termStatsProbe]]), so the scoring DAG never scans +
+    // aggregates + broadcasts blockstats per execution.
+    val ts = termStatsProbe(s, indexDir, allTerms)
+    val dfByTerm = ts.dfByTerm
+    val globals = ts.globals(s)
     val selected = mltSelect(profRows, dfByTerm, maxTerms)
     val prof = selected.toDF("query_id", "term")
     // the selected terms' df is already on the driver — hand it down as
@@ -1399,8 +1409,8 @@ object PostingsIndex {
     // v3 + termstats, v4 + positional payload, v5 + doclens norms: the
     // doclens table arrived with the delete path and the cached v4
     // lifecycle indexes were built WITHOUT it, so delete()/rebucket()
-    // against one crashed on the missing table — found by RebucketProbe
-    // round 12) must never reuse an old-layout index behind the marker
+    // against one crashed on the missing table — BASELINE.md round 12,
+    // "Rebucket") must never reuse an old-layout index behind the marker
     val idx = s"/tmp/graft_postings_v5_${java.lang.Long.toHexString(tag)}"
     // the built-once memo lives BESIDE the tree, not inside it: rebucket's
     // whole-tree swap carries only the index's own tables, so an in-tree

@@ -579,8 +579,8 @@ object Retrieval {
     * for bit), ZERO index reads. This is the leg a stats-driven router
     * ([[Router.hybridAuto]]) flips to when the corpus is small enough
     * that the indexed path's fixed costs (≈6 sequential bounded driver
-    * jobs — the HybridProbe attribution) outweigh its index-bounded
-    * I/O; it is also the apples-to-apples comparand that turns the
+    * jobs — the BASELINE.md round-11 attribution) outweigh its
+    * index-bounded I/O; it is also the apples-to-apples comparand that turns the
     * "indexed wins at scale" regime claim into a measurable crossover.
     *
     * Construction: ONE corpus tokenize pass filtered to the probe docs'

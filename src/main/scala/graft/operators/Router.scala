@@ -36,7 +36,8 @@ import graft.sources.Corpus
   *    file open) — the per-partition term is load-bearing: it is what
   *    correctly routes a FRAGMENTED index (superBits sized for a corpus
   *    that then grew 10×) back to the linear scan, the one measured
-  *    point where the index loses (Bm25CrossoverProbe + SbSizeProbe);
+  *    point where the index loses (BASELINE.md round 12, "Measured
+  *    retrieval crossovers"; [[calibrate]] re-measures the constants);
   *  - ann/hybrid decide in token-units: a full text scan costs
   *    `total_len` (every token tokenized whether or not it matters), a
   *    term-pruned postings read costs Σ df, vector work converts at
@@ -70,21 +71,21 @@ object Router {
   /** Token-units charged per extra sequential driver job of an indexed
     * path (ann/hybrid deciders) — ~0.2 s of scheduler latency expressed
     * at the measured small-corpus scan rate (~60K token-units/s,
-    * Bm25CrossoverProbe round 12). At production corpus sizes this term
+    * BASELINE.md round 12). At production corpus sizes this term
     * is noise; at gate sizes it is the honest reason a scan can win. */
   private[graft] def jobOverheadTokens(s: SparkSession): Long =
     s.conf.getOption(overheadKey).map(_.toLong).getOrElse(12000L)
 
   /** The bm25/phrase cost model's machine constants. The DEFAULTS are
-    * measurements from the round-12 crossover campaign on the build
-    * sandbox (Bm25CrossoverProbe + SbSizeProbe — they match the measured
+    * measurements from the round-12 crossover campaign (BASELINE.md
+    * round 12, "Measured retrieval crossovers" — they match the measured
     * winner at all four probed points including the fragmentation flip);
     * on different hardware the route near a crossover can flip wrong
     * (spinning disks: per-partition open ≫ 9 ms), so every constant is
-    * conf-overridable under `spark.graft.router.*` — re-measure with the
-    * two probes and set the confs (BASELINE.md documents the procedure).
-    * The deciders only need cost ORDER, which is why coarse constants
-    * with an override beat a fragile auto-calibration pass. */
+    * conf-overridable under `spark.graft.router.*` — [[calibrate]]
+    * re-measures all four on the running machine and sets the confs in
+    * one call ([[calibrateOrLoad]] persists the profile). The deciders
+    * only need cost ORDER, so the defaults only have to get that right. */
   final case class Costs(
       scanFixedMs: Long = 800L,   // corpus tokenize pass, fixed
       indexFixedMs: Long = 450L,  // index probe session, fixed
@@ -116,7 +117,7 @@ object Router {
   // ---- pure deciders (unit-testable on synthetic stats) ----
 
   // bm25/phrase model in MILLISECONDS, three machine constants measured
-  // by Bm25CrossoverProbe + SbSizeProbe (BASELINE round 12) — this is
+  // in the BASELINE round-12 crossover campaign — this is
   // the one family where a single marginal rate cannot match the
   // measurements, because the indexed side's real cost has a
   // PARTITION-COUNT term: every superblock's file must be opened even
@@ -338,15 +339,9 @@ object Router {
 
   // ---- stored-stats probes (driver-bounded metadata reads) ----
 
-  /** Corpus token count from the postings index's blockstats — the
-    * index carries its own ANALYZE. */
-  private[graft] def totalLenOf(s: SparkSession, pidx: String): Long =
-    Corpus.read(s, s"$pidx/blockstats")
-      .agg(coalesce(sum(col("total_len")), lit(0L))).collect()(0).getLong(0)
-
   /** Σ df over the probe terms from the stored termstats — a
     * term-pruned, superblock-count-bounded read. */
-  private[graft] def sumDfOf(
+  private def sumDfOf(
       s: SparkSession, pidx: String, terms: Seq[String]): Long =
     Corpus.read(s, s"$pidx/termstats")
       .where(col("term").isin(terms: _*))
@@ -357,7 +352,7 @@ object Router {
     * advisory needs, probed together so either costs one job (the
     * choice builders ignore the watermark; [[adviseOn]] feeds it to
     * [[PostingsIndex.plannedRebucket]]). */
-  private[graft] def postingsMetaOf(
+  private def postingsMetaOf(
       s: SparkSession, pidx: String): (Long, Long, Long) = {
     val r = Corpus.read(s, s"$pidx/blockstats")
       .agg(coalesce(sum(col("total_len")), lit(0L)), count(lit(1)),
@@ -750,7 +745,7 @@ object Router {
     else Retrieval.hybridRrfScannedFor(s, dir, queryIds)
   }
 
-  private[graft] def hybridAutoOn(
+  private def hybridAutoOn(
       s: SparkSession, dir: String, pidx: String, vidx: String): DataFrame =
     if (hybridChoiceOf(s, pidx, vidx).leg == "indexed")
       Retrieval.hybridRrfIndexed(s, dir)

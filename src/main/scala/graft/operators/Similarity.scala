@@ -85,7 +85,7 @@ object Similarity {
   def annBruteForce(s: SparkSession, dir: String): DataFrame =
     annBruteForceFrom(embFrame(s, dir))
 
-  private[graft] def annBruteForceFrom(e: DataFrame): DataFrame =
+  private def annBruteForceFrom(e: DataFrame): DataFrame =
     rankBySim(cosineScoredFrom(e, nQueries))
 
   /** Exact cosine scores of every (query, candidate) pair for the first
@@ -221,7 +221,7 @@ object Similarity {
   def annIvf(s: SparkSession, dir: String): DataFrame =
     annIvfFrom(embFrame(s, dir))
 
-  private[graft] def annIvfFrom(e: DataFrame): DataFrame =
+  private def annIvfFrom(e: DataFrame): DataFrame =
     annIvfFromK(e, topK)
 
   /** [[annIvfFrom]] at an explicit `k` — the seam
@@ -504,9 +504,10 @@ object Similarity {
   private[graft] def annIvfPqFrom(e: DataFrame): DataFrame =
     annIvfPqFromAt(e, pqCandidates)
 
-  /** [[annIvfPqFrom]] with the over-fetch exposed — `IvfPqProbe`
-    * measures the recall-vs-nCand curve this knob buys. */
-  private[graft] def annIvfPqFromAt(e: DataFrame, nCand: Int): DataFrame = {
+  /** [[annIvfPqFrom]] with the over-fetch exposed; the recall-vs-nCand
+    * curve this knob buys is in BASELINE.md round 10 (nCand 5 → 0.40,
+    * 20 → 0.62, 40 → 0.84, 60 → 0.92 = the IVF ceiling). */
+  private def annIvfPqFromAt(e: DataFrame, nCand: Int): DataFrame = {
     // IVF half — cells, assignment, probes: annIvfFrom's exact trees
     val cents = e.where(col("vec_id") < nCentroids)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
@@ -949,8 +950,8 @@ object Similarity {
     * band-key equi-join scaled to band-key volume → exact verify on
     * candidates only; never all-pairs. */
   /** MEASURED mid-cosine (0.78-plant) recall floors per 128-bit split —
-    * the WideRecallProbe sweep, stable across both probed scales (1 K
-    * and 10 K vectors; BASELINE r14 table): (8, 16) holds 0.92, (16, 8)
+    * the BASELINE r14 sweep (`WideRecallProbe` harness), stable across
+    * both probed scales (1 K and 10 K vectors): (8, 16) holds 0.92, (16, 8)
     * 0.13–0.15 at ~25× fewer candidates; (32, 4) measured ~0 at every
     * cosine and is not offered. The floors are what the recall-target
     * selection compares against — measured numbers, NOT the iid-LSH

@@ -100,7 +100,7 @@ object Sketches {
 
   /** Conf key: `"md5"` (default — oracle-exact across engines) or
     * `"xxhash64"` (production-fast; estimator-accuracy-gated). */
-  private[graft] val hashModeKey = "spark.graft.analyze.hashMode"
+  private val hashModeKey = "spark.graft.analyze.hashMode"
 
   private def fastMode(s: SparkSession): Boolean =
     s.conf.getOption(hashModeKey).contains("xxhash64")

@@ -111,12 +111,12 @@ object StreamEmbedDedup {
       bitsPerBand: Int = 2): Dataset[BandHit] =
     candidatesGrouped(vecs, watermarkDelay, retentionMs, bitsPerBand, nBands)
 
-  /** [[candidates]] with the band COUNT exposed too. `EmbDedupProbe`'s
-    * 4×4 variant (the same 16-plane signature regrouped as 4 bands ×
-    * 4 bits — half the state rows AND half the shuffled rows, at the
-    * standard (L, b) recall trade 1−(1−p⁴)⁴ vs 1−(1−p²)⁸) measures the
-    * lever: only ~+6% ev/s — which REFUTES the simple "state-row-bound"
-    * model. The probe's 4-layer decomposition (passthrough / bandsonly /
+  /** [[candidates]] with the band COUNT exposed too. The 4×4 variant
+    * (BASELINE.md round 10; the same 16-plane signature regrouped as
+    * 4 bands × 4 bits — half the state rows AND half the shuffled rows,
+    * at the standard (L, b) recall trade 1−(1−p⁴)⁴ vs 1−(1−p²)⁸) measures
+    * the lever: only ~+6% ev/s — which REFUTES the simple "state-row-bound"
+    * model. The 4-layer decomposition (passthrough / bandsonly /
     * statefulnoop / detector, idle local[32]) shows the leg's ~86 µs/ev
     * is a STACK: ~11 µs MemoryStream ingestion of the 64-double row,
     * ~26 µs signature + 8-row fan-out + encoder, ~14 µs shuffle +
@@ -128,7 +128,7 @@ object StreamEmbedDedup {
     * The default stays 8×2 because the completeness contract is against
     * the COMMITTED batch/oracle parameterization; a deployment that
     * re-sizes the batch sweep's banding passes the same (b, L) here. */
-  private[graft] def candidatesGrouped(
+  private def candidatesGrouped(
       vecs: Dataset[VecEvent],
       watermarkDelay: String,
       retentionMs: Long,

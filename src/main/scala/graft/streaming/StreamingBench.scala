@@ -101,7 +101,7 @@ object StreamingBench {
     * for `batches` micro-batches of `mkBatch(batch, perBatch)` rows through
     * `mkQuery`'s streaming plan. `outputMode` must match the plan ("update"
     * for windowed aggs, "append" for the stateful operators). */
-  def throughputOf[T: Encoder](
+  private def throughputOf[T: Encoder](
       spark: SparkSession,
       mkQuery: Dataset[T] => DataFrame,
       mkBatch: (Int, Int) => Seq[T],
@@ -169,7 +169,7 @@ object StreamingBench {
   /** [[throughputOf]] for operators that run as `foreachBatch` sinks
     * (index serving): the leg supplies the started query, the harness
     * owns only the feed loop and the clock. */
-  def throughputForeach[T: Encoder](
+  private def throughputForeach[T: Encoder](
       spark: SparkSession,
       start: Dataset[T] => org.apache.spark.sql.streaming.StreamingQuery,
       mkBatch: (Int, Int) => Seq[T],
@@ -194,7 +194,7 @@ object StreamingBench {
   /** Two-stream harness for the join paths: both sides advance together,
     * one `mkLeft`/`mkRight` pair per micro-batch. Events counted = total
     * rows fed on both sides. */
-  def throughput2[A: Encoder, B: Encoder](
+  private def throughput2[A: Encoder, B: Encoder](
       spark: SparkSession,
       mkQuery: (Dataset[A], Dataset[B]) => DataFrame,
       mkLeft: (Int, Int) => Seq[A],
@@ -224,18 +224,6 @@ object StreamingBench {
       q.stop()
       spark.sql(s"DROP VIEW IF EXISTS $queryName")
     }
-  }
-
-  /** Kept as the named single-path entry point (round-2 API). */
-  def fixedWindowThroughput(
-      spark: SparkSession,
-      batches: Int = 5,
-      perBatch: Int = 60000): (Long, Double) = {
-    import spark.implicits._
-    throughputOf[AdEvent](spark,
-      CtrStream.fixedWindowCtr(_, "10 minutes", "0 seconds"),
-      (b, n) => (0 until n).map(i => event(b.toLong * n + i, base)),
-      "update", "graft_stream_bench", batches, perBatch)
   }
 
   /** A bench leg: `twsOnly` marks transformWithState paths, which Spark
@@ -334,8 +322,8 @@ object StreamingBench {
       // embedding near-dup at ingestion (r9): 1/4 batch size — each
       // event carries a 64-double vector, ~4× the byte width of the doc
       // legs' rows, and the driver-side MemoryStream ships the batch in
-      // the task binary. r10 re-attribution (EmbDedupProbe's 4-layer
-      // decomposition): the leg's ~86 µs/ev is a cost STACK — ~11 µs
+      // the task binary. r10 re-attribution (4-layer decomposition,
+      // BASELINE.md round 10): the leg's ~86 µs/ev is a cost STACK — ~11 µs
       // ingestion (pass-through 90k ev/s), ~26 µs signature + 8-row
       // fan-out + encode (bandsonly 27k), ~14 µs shuffle + stateful
       // framework (statefulnoop 19k), ~35 µs state get/put (detector
@@ -561,7 +549,8 @@ object StreamingBench {
     // stream-stream join (two sides × keyToNumValues/keyWithIndexToValue).
     // On the 4-core bench runner 32 partitions is 8× over-partitioned and
     // the commit overhead dominates the short micro-batches (interval leg
-    // measured 2.4× faster at parts=4, graft.IntervalProbe). Same sizing
+    // measured 2.4× faster at parts=4, BASELINE.md round 7 interval-leg
+    // audit). Same sizing
     // rule a 1000-executor deployment wants: state partitions ≈ cluster
     // cores, set per streaming query, independent of the batch default.
     // r7 step-change: leg numbers before this fix are in BENCH_r06.json.
@@ -602,8 +591,9 @@ object StreamingBench {
         // join state format 3 (RocksDB-only): ONE store with virtual
         // column families instead of the classic four per partition —
         // every micro-batch commits 1 store instead of 4 on the interval
-        // leg. Measured steady-state 37 → 53k ev/s (graft.IntervalProbe,
-        // r7); the production config any RocksDB deployment should run.
+        // leg. Measured steady-state 37 → 53k ev/s (BASELINE.md round 7
+        // interval-leg audit); the production config any RocksDB
+        // deployment should run.
         spark.conf.set(joinFmtKey, "3")
         run("_rocksdb_", tws = true).mkString("\"rocksdb\":{", ",", "}")
       } catch {

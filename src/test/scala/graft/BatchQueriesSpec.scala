@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +25,25 @@ object SparkTestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs submitted while `f` runs, counted by a listener. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // deterministic drains of the async listener bus (no racy sleep)
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      f
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 class BatchQueriesSpec extends AnyFunSuite {

@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DateType, IntegerType, StringType}
@@ -27,24 +25,6 @@ class CorpusReadSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory(s"graft_corpus_read_$tag")
     try f(dir.resolve("t").toString)
     finally graft.operators.IndexFs.deleteTree(dir.toString)
-  }
-
-  /** Spark jobs submitted while `f` runs, counted by a listener. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(l)
   }
 
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =

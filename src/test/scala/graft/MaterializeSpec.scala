@@ -104,6 +104,34 @@ class MaterializeSpec extends AnyFunSuite {
     }
   }
 
+  test("an eager checkpoint runs one job and evaluates the frame once, in both modes") {
+    // the numbers Materialize's scaladoc states: reliable mode writes its
+    // checkpoint files inside the one materializing job — no count job
+    // first, no second evaluation of the frame
+    val dir = Files.createTempDirectory("graft_reliable_jobs").toString
+    val evals = spark.sparkContext.longAccumulator("graft_ckpt_evals")
+    val tap = udf((x: Long) => { evals.add(1L); x }).asNondeterministic()
+    def cost(mode: String): (Int, Long) = {
+      spark.conf.set(Materialize.modeKey, mode)
+      evals.reset()
+      var ckpt: org.apache.spark.sql.DataFrame = null
+      val jobs = SparkTestSession.jobsDuring {
+        ckpt = Materialize.checkpoint(spark.range(1000).select(tap(col("id")).as("id")))
+      }
+      org.apache.spark.sql.graft.Bridge.releaseCheckpoint(ckpt)
+      (jobs, evals.value)
+    }
+    spark.conf.set(Materialize.dirKey, dir)
+    try {
+      assert(cost("local") === ((1, 1000L)))
+      assert(cost("reliable") === ((1, 1000L)))
+    } finally {
+      spark.conf.unset(Materialize.modeKey)
+      spark.conf.unset(Materialize.dirKey)
+      graft.operators.IndexFs.deleteTree(dir)
+    }
+  }
+
   test("source audit: no operator calls localCheckpoint() directly") {
     // the seam is only a seam if every site goes through it
     val root = Paths.get("src/main/scala/graft")

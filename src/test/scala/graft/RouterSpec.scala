@@ -46,7 +46,7 @@ class RouterSpec extends AnyFunSuite {
     assert(Router.decideBm25(totalLen = 50000L, sumDf = 40000L, nSb = 300L)
       .leg === "scan")
     // fragmentation ALONE flips it — the measured sf1 point (205 sbs:
-    // indexed 2.6 s vs scan 1.7 s; 13 sbs: 0.5 s — SbSizeProbe)
+    // indexed 2.6 s vs scan 1.7 s; 13 sbs: 0.5 s — BASELINE.md round 12)
     assert(Router.decideBm25(totalLen = 10000000L, sumDf = 2000L, nSb = 2000L)
       .leg === "scan")
 

@@ -283,21 +283,8 @@ class ScaleOpsSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.transform(
           col("embedding"), x => x.cast("double")).as("v"))
       .localCheckpoint()
-    def jobsFor(shardTarget: Long): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        Similarity.kmeansAssignedSharded(spark, e, shardTarget).count()
-        // deterministic drain of the async listener bus (no racy sleep)
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(l)
-      counter.get()
+    def jobsFor(shardTarget: Long): Int = jobsDuring {
+      Similarity.kmeansAssignedSharded(spark, e, shardTarget).count(); ()
     }
     val j5 = jobsFor(100L)  // 5 shards
     val j10 = jobsFor(50L)  // 10 shards

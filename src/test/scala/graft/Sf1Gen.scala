@@ -4,10 +4,12 @@ package graft
 //   sbt "Test/runMain graft.Sf1Gen /root/testdata/sf0.1 testdata/sf1 10"
 //
 // The driver ships sf0.001/0.01/0.1 only; sf1 (~6M-row lineitem) is built
-// locally as 10 content-distinct replicas of sf0.1 — the same discipline as
-// [[ScaleGen]], extended to the whole star schema:
+// locally as 10 CONTENT-DISTINCT replicas of sf0.1 (exact twins would give
+// every pair-generating operator R-1 duplicates per document and grow its
+// candidate volume quadratically in R, which says nothing about corpus
+// growth):
 // - relational tables: replica k offsets every INT64 entity key by
-//   k * 10,000,000 (the ScaleGen offset), so per-entity aggregates (orders
+//   k * 10,000,000, so per-entity aggregates (orders
 //   per customer, lines per order, revenue per supplier, sessions per
 //   user) keep the original's exact distribution while the join fan-out
 //   scales linearly. region/nation stay fixed (fixed-size dimensions,

@@ -5,20 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
 
-/** The wide-signature recall/cost CURVE (verdict r13 Next #5): sweep the
-  * admissible (bitsPerBand, nBands) splits of the one- and two-word
-  * signature budgets against planted near-dup pairs at four cosine
-  * levels and two corpus scales, measuring per setting
+/** Harness for the wide-signature recall/cost curve (verdict r13 Next
+  * #5): planted near-dup pairs at an exact cosine, and per
+  * (bitsPerBand, nBands) setting
   *
-  *  - recall over the planted pairs at each cosine, and
+  *  - recall over the planted pairs, and
   *  - candidate volume (Σ over (band, key) buckets of C(n,2) — the
   *    number of pairs the exact verify must score, the setting's cost).
   *
-  * Output feeds the BASELINE r14 table and the measured floors
-  * `WideRecallSpec` pins. Dev tool; run idle:
-  *
-  *   sbt "Test/runMain graft.WideRecallProbe"
-  */
+  * The full sweep (four cosines, two scales) is recorded in BASELINE.md
+  * round 14 ("Wide-signature recall/cost curve"); `WideRecallSpec` pins
+  * its measured floors on this harness. */
 object WideRecallProbe {
 
   private val dims = 64
@@ -95,39 +92,5 @@ object WideRecallProbe {
       .agg(coalesce(sum(col("count") * (col("count") - 1)), lit(0L)))
       .collect()(0).getLong(0) / 2
     (hit.toDouble / nPairs, cand)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local("32")
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val settings = Seq((16, 4), (8, 16), (16, 8), (32, 4))
-    val cosines = Seq(0.9, 0.78, 0.6, 0.5)
-    // xlarge (~104 K vectors) is the spill-regime scale the bigNCut
-    // admissibility cliff came from (a separate r13 experiment) — one
-    // mid-cosine point ties the cut and the floors to the SAME sweep
-    // (verdict r14 Next #5); the other cosines add cost, not evidence,
-    // at that scale
-    val scales = Seq(
-      ("small", 150, 700, cosines),
-      ("large", 1000, 8000, cosines),
-      ("xlarge", 2000, 100000, Seq(0.78)))
-    for ((scale, nPairs, nFill, cosSet) <- scales; cosT <- cosSet) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_recall_${scale}_$cosT").toFile
-      dir.deleteOnExit()
-      val idBase = (cosT * 1000).toLong * 1000000L
-      val pairBase = idBase + 500000L
-      plantedCorpus(nPairs, cosT, nFill, idBase, pairBase)
-        .toDF("vec_id", "embedding").write.mode("overwrite")
-        .parquet(s"${dir.getAbsolutePath}/embeddings.parquet")
-      for ((bb, nb) <- settings) {
-        val (recall, cand) = measure(spark, dir.getAbsolutePath,
-          bb, nb, nPairs, idBase, pairBase)
-        println(f"RECALL scale=$scale%-5s cos=$cosT%.2f ($bb%2d,$nb%2d) " +
-          f"recall=$recall%.3f candidates=$cand%d")
-      }
-    }
-    spark.stop()
   }
 }
