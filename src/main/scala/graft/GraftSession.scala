@@ -24,6 +24,10 @@ import org.apache.spark.sql.SparkSession
   * (`spark.sql.codegen.cache.maxEntries` = 4096; the reasoning and the
   * measurements sit at the setting). It is a static conf: the first
   * session built in a JVM fixes the cache size for every later one.
+  *
+  * Library code reads the session conf and writes it only through
+  * `Router.calibrate`/`calibrateOrLoad` and `RangeJoin.autoBandWidth`,
+  * whose documented job is to set it.
   */
 object GraftSession {
 

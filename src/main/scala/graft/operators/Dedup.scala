@@ -815,10 +815,10 @@ object Dedup {
     * contraction rounds; a cap without convergence throws rather than
     * returning partial labels.
     *
-    * The loop's exchanges are sized to the CONTRACTED graph's cardinality,
-    * not the corpus's: after LSH the near-dup pair graph is orders of
-    * magnitude smaller than the corpus, and at 100 TB you size partitions
-    * to the data each stage actually moves. */
+    * AQE sizes the loop's exchanges from the shuffle bytes they move: after
+    * LSH the near-dup pair graph is orders of magnitude smaller than the
+    * corpus, so its stages coalesce to the partitions the CONTRACTED
+    * graph needs, not the corpus's. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val (pairsAll, lshDeps) = minhashLshPairsImpl(s, dir)
     val pairs = pairsAll.select(col("doc_a"), col("doc_b"))
@@ -861,7 +861,8 @@ object Dedup {
     // window min of dst. The round's one distinct collapses the multi-
     // edges both stars may emit — not load-bearing for correctness (the
     // label-equality proof ignores dupes) but it bounds edge growth
-    // across rounds and keeps the nEdges-based partition sizing honest.
+    // across rounds, and with it the shuffle bytes AQE sizes the next
+    // round's exchanges from.
     def smallStar(e: DataFrame): DataFrame = {
       val withM = e.select(col("src"), col("dst"),
         min(col("dst")).over(Window.partitionBy(col("src"))).as("m"))
@@ -905,40 +906,34 @@ object Dedup {
     // thrashed, so every run re-ran Janino on the same plan shapes.
     // GraftSession now sizes the cache to 4096 and a repeat run compiles
     // (almost) nothing; what remains is planning and the compute.
-    val conf = s.conf
-    val prevParts = conf.get("spark.sql.shuffle.partitions")
-    try {
-      // ~125k edges (≈2 MB) per loop partition, never above the session
-      // setting: the loop's exchanges move the contracted graph, not the
-      // corpus, so partition count follows ITS cardinality — small enough
-      // that a corpus-sized setting would schedule mostly-empty tasks,
-      // large enough that a multi-million-edge graph still fans out
-      val nEdges = edges0.count() // cheap: scan of the materialized RDD
-      conf.set("spark.sql.shuffle.partitions",
-        math.max(1L, math.min(prevParts.toLong, nEdges / 125000L + 1L)).toString)
-      var rounds = 0
-      var labels = labelsOf(edges)
-      while (unmerged(labels) > 0) {
-        if (rounds >= 16) throw new IllegalStateException(
-          s"dedupClusters star contraction did not stabilize in $rounds rounds " +
-            "— refusing to return partial labels")
-        // checkpoint each round: both star ops self-union their input, so
-        // an unmaterialized chain would grow the plan 4×/round, and the
-        // label/verify jobs reread the round's result
-        val next = smallStar(largeStar(edges)).graftCheckpoint()
-        // the superseded round has no consumer left (edges0, which the
-        // verification join rereads every iteration, is kept alive)
-        if (edges ne edges0) org.apache.spark.sql.graft.Bridge.releaseCheckpoint(edges)
-        edges = next
-        labels = labelsOf(edges)
-        rounds += 1
-      }
-      System.err.println(s"dedup_clusters: star contraction stabilized in $rounds rounds")
-      // edges0 is CALLER-owned — it stays usable after this returns (its
-      // blocks fall to the ContextCleaner with the caller's reference);
-      // only the loop-owned round intermediates were released above
-      labels
-    } finally conf.set("spark.sql.shuffle.partitions", prevParts)
+
+    // No partition sizing here: AQE coalesces each of the loop's
+    // exchanges from the shuffle bytes it measures, so the contracted
+    // graph's stages get few partitions and a multi-million-edge graph
+    // still fans out, and the session conf is never written (this runs
+    // inside concurrent Overlap chains).
+    var rounds = 0
+    var labels = labelsOf(edges)
+    while (unmerged(labels) > 0) {
+      if (rounds >= 16) throw new IllegalStateException(
+        s"dedupClusters star contraction did not stabilize in $rounds rounds " +
+          "— refusing to return partial labels")
+      // checkpoint each round: both star ops self-union their input, so
+      // an unmaterialized chain would grow the plan 4×/round, and the
+      // label/verify jobs reread the round's result
+      val next = smallStar(largeStar(edges)).graftCheckpoint()
+      // the superseded round has no consumer left (edges0, which the
+      // verification join rereads every iteration, is kept alive)
+      if (edges ne edges0) org.apache.spark.sql.graft.Bridge.releaseCheckpoint(edges)
+      edges = next
+      labels = labelsOf(edges)
+      rounds += 1
+    }
+    System.err.println(s"dedup_clusters: star contraction stabilized in $rounds rounds")
+    // edges0 is CALLER-owned — it stays usable after this returns (its
+    // blocks fall to the ContextCleaner with the caller's reference);
+    // only the loop-owned round intermediates were released above
+    labels
   }
 
   val dedupClustersSql: String =

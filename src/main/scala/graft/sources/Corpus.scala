@@ -164,13 +164,12 @@ object Corpus {
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def events(s: SparkSession, d: String): DataFrame = {
     // events.parquet carries TIMESTAMP(NANOS), which Spark rejects unless
-    // this legacy flag is on. It is a runtime-settable SQL conf — set it
-    // defensively so callers with a plain session (e.g. a smoke harness)
-    // work too, but only when it is off: this runs inside concurrent
-    // Overlap chains, and GraftSession sessions never need the write. The
-    // set must precede the read, whose memo stamp includes this conf.
+    // this legacy flag is on. GraftSession.builder sets it; the read only
+    // checks it, because it runs inside concurrent Overlap chains and a
+    // write here would change the caller's shared session.
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
-    if (!s.conf.getOption(nanos).contains("true")) s.conf.set(nanos, "true")
+    require(s.conf.getOption(nanos).contains("true"),
+      s"Corpus.events needs $nanos=true; build the session with GraftSession.builder")
     normalizeTs(table(s, d, "events"))
   }
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")

@@ -542,6 +542,10 @@ object StreamingBench {
     * actually assume. The transformWithState twins run only on RocksDB
     * (a Spark engine requirement, not a choice here). */
   def allPaths(spark: SparkSession, batches: Int = 5, perBatch: Int = 60000): String = {
+    // Each store runs on a child session of its own, so the settings
+    // below apply only to the bench's queries and never to the caller's
+    // session. A child shares the SparkContext and inherits the builder
+    // options and extensions (the legs use no SQL-registered UDAF).
     // State partitions sized to the actual runtime parallelism, not the
     // batch shuffle default (32): a streaming query fixes its state
     // partition count at start, and EVERY micro-batch then commits one
@@ -554,15 +558,12 @@ object StreamingBench {
     // rule a 1000-executor deployment wants: state partitions ≈ cluster
     // cores, set per streaming query, independent of the batch default.
     // r7 step-change: leg numbers before this fix are in BENCH_r06.json.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.getOption(partsKey)
-    spark.conf.set(partsKey, spark.sparkContext.defaultParallelism.toString)
-    try allPathsInner(spark, batches, perBatch)
-    finally prevParts.fold(spark.conf.unset(partsKey))(spark.conf.set(partsKey, _))
-  }
-
-  private def allPathsInner(spark: SparkSession, batches: Int, perBatch: Int): String = {
-    val all = legs(spark, batches, perBatch)
+    def child(confs: (String, String)*): SparkSession = {
+      val c = spark.newSession()
+      c.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toString)
+      confs.foreach { case (k, v) => c.conf.set(k, v) }
+      c
+    }
     // Compact per-leg emission: ONE integer, events/sec. The driver
     // archives only a 2000-char tail slice of the bench stdout line, and
     // the r7 verbose form ({events,batches,sec,events_per_sec} per leg,
@@ -570,41 +571,35 @@ object StreamingBench {
     // the query map out of the round artifact (round-7 verdict, Wrong
     // #3). ev/s IS the headline metric; events ≈ batches×per_batch (top
     // level, once) and sec is derivable, so nothing of substance is lost.
-    def run(suffix: String, tws: Boolean): Seq[String] =
-      all.filter(l => tws || !l.twsOnly).map { leg =>
+    def run(session: SparkSession, suffix: String, tws: Boolean): Seq[String] =
+      legs(session, batches, perBatch).filter(l => tws || !l.twsOnly).map { leg =>
         val (events, sec) = leg.run(s"graft_stream_bench$suffix${leg.name}")
         val rate = if (sec > 0) events / sec else 0.0
         s""""${leg.name}":${math.round(rate)}"""
       }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val joinFmtKey = "spark.sql.streaming.join.stateFormatVersion"
-    val prev = spark.conf.getOption(providerKey)
-    val prevFmt = spark.conf.getOption(joinFmtKey)
-    val defaults = run("_", tws = false)
+    val defaults = run(child(), "_", tws = false)
     // a RocksDB failure (e.g. missing/incompatible native lib) must not
     // discard the default-store results already paid for — it degrades to
     // an err entry inside its own block
     val rocks =
       try {
-        spark.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // join state format 3 (RocksDB-only): ONE store with virtual
-        // column families instead of the classic four per partition —
-        // every micro-batch commits 1 store instead of 4 on the interval
-        // leg. Measured steady-state 37 → 53k ev/s (BASELINE.md round 7
-        // interval-leg audit); the production config any RocksDB
-        // deployment should run.
-        spark.conf.set(joinFmtKey, "3")
-        run("_rocksdb_", tws = true).mkString("\"rocksdb\":{", ",", "}")
+        val rocksdb = child(
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+          // join state format 3 (RocksDB-only): ONE store with virtual
+          // column families instead of the classic four per partition —
+          // every micro-batch commits 1 store instead of 4 on the interval
+          // leg. Measured steady-state 37 → 53k ev/s (BASELINE.md round 7
+          // interval-leg audit); the production config any RocksDB
+          // deployment should run.
+          "spark.sql.streaming.join.stateFormatVersion" -> "3")
+        run(rocksdb, "_rocksdb_", tws = true).mkString("\"rocksdb\":{", ",", "}")
       } catch {
         case e: Throwable =>
           val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
             .flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
                        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
           s""""rocksdb":{"err":"$msg"}"""
-      } finally {
-        prev.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
-        prevFmt.fold(spark.conf.unset(joinFmtKey))(spark.conf.set(joinFmtKey, _))
       }
     (Seq(s""""batches":$batches,"per_batch":$perBatch""") ++ defaults :+ rocks)
       .mkString("{", ",", "}")

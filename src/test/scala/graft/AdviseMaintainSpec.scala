@@ -29,17 +29,6 @@ class AdviseMaintainSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def withCosts[T](pairs: (String, String)*)(f: => T): T = {
-    val keys = pairs.map(_._1)
-    val before = keys.map(k => k -> spark.conf.getOption(k))
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   // 41 one-term docs spread one per 256-doc superblock: fragmented
   // enough that the ms model prices the indexed leg above the tiny
   // scan (41 sbs × 9 ms > 800 ms fixed-scan margin), while the planned
@@ -82,7 +71,7 @@ class AdviseMaintainSpec extends AnyFunSuite {
 
     // a machine profile where the tiny scan wins regardless of layout:
     // the threshold policy would rewrite the tree; advise must not
-    withCosts("spark.graft.router.scanFixedMs" -> "1",
+    SparkTestSession.withConf("spark.graft.router.scanFixedMs" -> "1",
         "spark.graft.router.tokenNanos" -> "1") {
       val advs = Router.advisePostingsOn(spark, idx, targetSbs = 2)
       assert(advs.forall(_.current.leg == "scan"))
@@ -110,7 +99,7 @@ class AdviseMaintainSpec extends AnyFunSuite {
     // fixed cost) — no flip ever — but the partition tax makes the
     // planned ~2-sb layout ~7x cheaper than the 41-sb one: the I/O-law
     // repair the flip-only gate deferred (r14 verdict, Wrong #2)
-    withCosts("spark.graft.router.scanFixedMs" -> "100000",
+    SparkTestSession.withConf("spark.graft.router.scanFixedMs" -> "100000",
         "spark.graft.router.sbOpenMs" -> "100") {
       val advs = Router.advisePostingsOn(spark, idx, targetSbs = 2)
       assert(advs.forall(_.current.leg != "scan"))
@@ -120,7 +109,7 @@ class AdviseMaintainSpec extends AnyFunSuite {
 
       // with the bar raised above the predicted win, the repair defers —
       // the K conf is live, not cosmetic
-      withCosts("spark.graft.router.maintainWinRatio" -> "50") {
+      SparkTestSession.withConf("spark.graft.router.maintainWinRatio" -> "50") {
         val a = Router.maintainPostingsIfAdvised(spark, idx, targetSbs = 2)
         assert(a.head.contains("deferred"), a.head)
         assert(spark.read.parquet(s"$idx/blockstats").count() === sbsBefore)
@@ -162,7 +151,7 @@ class AdviseMaintainSpec extends AnyFunSuite {
     // a job-overhead profile where 4 cells route to the inline scan but
     // the planned 23-cell layout routes back to the index — the flip
     val idxB = mk()
-    withCosts("spark.graft.router.jobOverheadTokens" -> "100000") {
+    SparkTestSession.withConf("spark.graft.router.jobOverheadTokens" -> "100000") {
       val advs = Router.adviseAnnOn(spark, idxB)
       assert(advs.head.current.leg === "scan")
       assert(advs.head.wouldFlip, advs.head.render)
@@ -175,7 +164,7 @@ class AdviseMaintainSpec extends AnyFunSuite {
     // negligible) but the resize makes the probed read ~5.7x cheaper —
     // the widened gate fires the within-route repair
     val idxC = mk()
-    withCosts("spark.graft.router.jobOverheadTokens" -> "10") {
+    SparkTestSession.withConf("spark.graft.router.jobOverheadTokens" -> "10") {
       val advs = Router.adviseAnnOn(spark, idxC)
       assert(advs.head.current.leg === "indexed")
       assert(!advs.head.wouldFlip, advs.head.render)

@@ -30,8 +30,7 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
   test("bare inequality join rewrites to a band equi-join with identical rows") {
     val naive = rangeJoin.select("pid", "rid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
-    spark.conf.set(confKey, "40")
-    try {
+    SparkTestSession.withConf(confKey -> "40") {
       val df = rangeJoin
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
@@ -44,7 +43,7 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
       assert(banded.nonEmpty)
       // the band columns are plumbing, not output
       assert(!df.columns.exists(_.contains("graft")), df.columns.mkString(","))
-    } finally spark.conf.unset(confKey)
+    }
   }
 
   test("auto-width from table_stats flips the plan and keeps rows identical") {
@@ -53,7 +52,7 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).sorted
     val stats = graft.operators.Sketches.tableStats(spark, sf)
       .localCheckpoint() // two autoBandWidth reads below
-    try {
+    SparkTestSession.withConf() {
       // derived from the REAL nightly-ANALYZE output: ~64 distinct
       // l_suppkey values per band
       val w = graft.operators.RangeJoin.autoBandWidth(spark, stats, "l_suppkey")
@@ -70,22 +69,20 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).sorted
       assert(banded === naive)
       assert(banded.nonEmpty)
-    } finally spark.conf.unset(confKey)
+    }
     // a manually-set conf is the override: auto must return it untouched
-    spark.conf.set(confKey, "40")
-    try {
+    SparkTestSession.withConf(confKey -> "40") {
       val w2 = graft.operators.RangeJoin.autoBandWidth(spark, stats, "l_suppkey")
       assert(w2 === 40L, "manual conf must win over the derived width")
       assert(spark.conf.get(confKey) === "40")
-    } finally spark.conf.unset(confKey)
+    }
     // an explicit 0 is the documented DISABLE — auto must not overwrite
     // it (that would silently re-enable the rewrite session-wide)
-    spark.conf.set(confKey, "0")
-    try {
+    SparkTestSession.withConf(confKey -> "0") {
       val w3 = graft.operators.RangeJoin.autoBandWidth(spark, stats, "l_suppkey")
       assert(w3 === 0L, "explicit disable must survive autoBandWidth")
       assert(spark.conf.get(confKey) === "0")
-    } finally spark.conf.unset(confKey)
+    }
   }
 
   test("unset conf leaves the nested-loop plan untouched") {
@@ -95,8 +92,7 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
   }
 
   test("equi joins and outer range joins are not rewritten") {
-    spark.conf.set(confKey, "40")
-    try {
+    SparkTestSession.withConf(confKey -> "40") {
       // equi+range: Catalyst already keys on the equi conjunct
       val equi = points.join(ranges,
         col("pid") % 100 === col("rid") % 100 && col("s") <= col("v") && col("v") < col("e"))
@@ -107,26 +103,24 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
         col("s") <= col("v") && col("v") < col("e"), "left_outer")
       assert(!outer.queryExecution.optimizedPlan.toString.contains("__graft"),
         "outer join must not be banded")
-    } finally spark.conf.unset(confKey)
+    }
   }
 
   test("inverted ranges are no-match rows, not a sequence crash") {
     import spark.implicits._
     val p = Seq((1L, 5L)).toDF("pid", "v")
     val r = Seq((10L, 0L, 10L), (11L, 20L, 3L)).toDF("rid", "s", "e") // 11 inverted
-    spark.conf.set(confKey, "4")
-    try {
+    SparkTestSession.withConf(confKey -> "4") {
       val out = p.join(r, col("s") <= col("v") && col("v") < col("e"))
         .select("pid", "rid").collect().map(x => (x.getLong(0), x.getLong(1)))
       assert(out.toSeq === Seq((1L, 10L)))
-    } finally spark.conf.unset(confKey)
+    }
   }
 
   test("SQL-surface joins get the same rewrite") {
     points.createOrReplaceTempView("graft_rr_points")
     ranges.createOrReplaceTempView("graft_rr_ranges")
-    spark.conf.set(confKey, "40")
-    try {
+    try SparkTestSession.withConf(confKey -> "40") {
       val df = spark.sql(
         """SELECT pid, rid FROM graft_rr_points p JOIN graft_rr_ranges r
           |ON r.s <= p.v AND p.v < r.e""".stripMargin)
@@ -134,7 +128,6 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"SQL join not banded:\n$plan")
       assert(df.count() > 0)
     } finally {
-      spark.conf.unset(confKey)
       spark.sql("DROP VIEW IF EXISTS graft_rr_points")
       spark.sql("DROP VIEW IF EXISTS graft_rr_ranges")
     }

@@ -26,6 +26,20 @@ object SparkTestSession {
   }
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Runs `f` with `pairs` set on the shared session. Afterwards every
+    * key that `pairs` or `f` changed is put back: to its previous value,
+    * or unset if it had none. */
+  def withConf[T](pairs: (String, String)*)(f: => T): T = {
+    val before = spark.conf.getAll
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally {
+      val after = spark.conf.getAll
+      (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+        .foreach(k => before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+    }
+  }
+
   /** Spark jobs submitted while `f` runs, counted by a listener. */
   def jobsDuring(f: => Unit): Int = {
     val sc = spark.sparkContext
@@ -50,10 +64,14 @@ class BatchQueriesSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("every declared query runs and has a schema-stable result") {
+    // and leaves the shared session's conf as it found it: queries run
+    // inside concurrent Overlap chains, so none may write the conf
+    val conf = spark.conf.getAll
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty, s"$name has no columns")
       assert(df.count() >= 0, s"$name failed to execute")
+      assert(spark.conf.getAll === conf, s"$name changed the session conf")
     }
   }
 

@@ -152,14 +152,10 @@ class CheckpointRestartSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.model.{AdEvent, Screen}
     val dir = tmp(s"ckpt-interval-$interrupt")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val fmtKey = "spark.sql.streaming.join.stateFormatVersion"
-    val prevProvider = spark.conf.getOption(providerKey)
-    val prevFmt = spark.conf.getOption(fmtKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(fmtKey, "3")
-    try {
+    SparkTestSession.withConf(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.join.stateFormatVersion" -> "3") {
       val ads = MemoryStream[AdEvent]
       val screens = MemoryStream[Screen]
       def start() =
@@ -201,9 +197,6 @@ class CheckpointRestartSpec extends AnyFunSuite {
       spark.read.parquet(s"$dir/out")
         .select("adId", "publicationId").as[(String, Option[String])]
         .collect().toSeq.filterNot(_._1 == "wm").sorted
-    } finally {
-      prevProvider.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
-      prevFmt.fold(spark.conf.unset(fmtKey))(spark.conf.set(fmtKey, _))
     }
   }
 

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DateType, IntegerType, StringType}
@@ -65,8 +63,7 @@ class CorpusReadSpec extends AnyFunSuite {
         w.write(new SimpleGroupFactory(schema).newGroup().append("b", v)))
       finally w.close()
       val key = "spark.sql.parquet.binaryAsString"
-      try {
-        spark.conf.set(key, "false")
+      SparkTestSession.withConf(key -> "false") {
         assert(Corpus.read(spark, p).schema("b").dataType === BinaryType)
         spark.conf.set(key, "true")
         val df = Corpus.read(spark, p)
@@ -74,7 +71,7 @@ class CorpusReadSpec extends AnyFunSuite {
         assert(df.orderBy("b").collect().map(_.getString(0)).toSeq === Seq("x", "y"))
         spark.conf.set(key, "false")
         assert(Corpus.read(spark, p).schema("b").dataType === BinaryType)
-      } finally spark.conf.unset(key)
+      }
     }
   }
 
@@ -125,22 +122,19 @@ class CorpusReadSpec extends AnyFunSuite {
     }
   }
 
+  test("events requires the nanosAsLong flag GraftSession sets and never writes it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val child = spark.newSession()
+    child.conf.set(key, "false")
+    val e = intercept[IllegalArgumentException](Corpus.events(child, sf))
+    assert(e.getMessage.contains("GraftSession"), e.getMessage)
+    assert(child.conf.get(key) === "false")
+  }
+
   test("source audit: no parquet read bypasses Corpus.read") {
     // a bare read re-runs the inference job on every call
-    val root = Paths.get("src/main/scala")
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "Corpus.scala")
-      .flatMap { p =>
-        new String(Files.readAllBytes(p), "UTF-8").linesIterator.zipWithIndex
-          .filter { case (l, _) =>
-            val t = l.trim
-            // skip pure comment lines; prose references are fine
-            !t.startsWith("//") && !t.startsWith("*") &&
-              t.contains(".read.parquet(")
-          }
-          .map { case (_, i) => s"$p:${i + 1}" }
-      }.toSeq
+    val offenders = SourceAudit.offenders("src/main/scala", Set("Corpus.scala"))(
+      _.contains(".read.parquet("))
     assert(offenders.isEmpty,
       s"parquet reads outside Corpus.read:\n${offenders.mkString("\n")}")
   }

@@ -27,10 +27,7 @@ class FastAnalyzeSpec extends AnyFunSuite {
 
   test("xxhash64 mode: NDV estimate within HLL error of exact; everything else bit-identical; md5 stays default") {
     val md5Rows = statsByCol() // default mode
-    spark.conf.set("spark.graft.analyze.hashMode", "xxhash64")
-    val fastRows =
-      try statsByCol()
-      finally spark.conf.unset("spark.graft.analyze.hashMode")
+    val fastRows = SparkTestSession.withConf("spark.graft.analyze.hashMode" -> "xxhash64")(statsByCol())
     assert(fastRows.keySet === md5Rows.keySet)
 
     fastRows.foreach { case (c, f) =>
@@ -49,10 +46,7 @@ class FastAnalyzeSpec extends AnyFunSuite {
     }
 
     // the default run IS the md5 run (conf unset ≡ conf = md5)
-    spark.conf.set("spark.graft.analyze.hashMode", "md5")
-    val explicitMd5 =
-      try statsByCol()
-      finally spark.conf.unset("spark.graft.analyze.hashMode")
+    val explicitMd5 = SparkTestSession.withConf("spark.graft.analyze.hashMode" -> "md5")(statsByCol())
     assert(explicitMd5.view.mapValues(_.toString).toMap ===
       md5Rows.view.mapValues(_.toString).toMap,
       "explicit md5 mode must equal the default bit for bit")

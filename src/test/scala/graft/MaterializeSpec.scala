@@ -33,20 +33,17 @@ class MaterializeSpec extends AnyFunSuite {
     // fresh thread-safety note: sc.checkpointDir is global — only probe
     // when unset, and restore the conf after
     assume(spark.sparkContext.getCheckpointDir.isEmpty)
-    spark.conf.set(Materialize.modeKey, "reliable")
-    try {
+    SparkTestSession.withConf(Materialize.modeKey -> "reliable") {
       val e = intercept[IllegalArgumentException] {
         Materialize.checkpoint(spark.range(10).toDF())
       }
       assert(e.getMessage.contains(Materialize.dirKey))
-    } finally spark.conf.unset(Materialize.modeKey)
+    }
   }
 
   test("reliable mode writes checkpoint files and returns identical results") {
     val dir = Files.createTempDirectory("graft_reliable_ckpt").toString
-    spark.conf.set(Materialize.modeKey, "reliable")
-    spark.conf.set(Materialize.dirKey, dir)
-    try {
+    try SparkTestSession.withConf(Materialize.modeKey -> "reliable", Materialize.dirKey -> dir) {
       // a representative operator THROUGH the seam: dedupFunnel checkpoints
       // three id frames and runs the two-thread overlap — the full
       // discipline, end to end, under reliable mode
@@ -58,8 +55,6 @@ class MaterializeSpec extends AnyFunSuite {
       assert(reliable.toSeq === local.toSeq,
         "checkpoint mode must not change operator results")
     } finally {
-      spark.conf.unset(Materialize.modeKey)
-      spark.conf.unset(Materialize.dirKey)
       def rm(p: Path): Unit = {
         if (Files.isDirectory(p))
           Files.list(p).iterator().asScala.toSeq.foreach(rm)
@@ -71,8 +66,6 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("reliable mode: releaseCheckpoint deletes the released rdd-* files") {
     val dir = Files.createTempDirectory("graft_reliable_release").toString
-    spark.conf.set(Materialize.modeKey, "reliable")
-    spark.conf.set(Materialize.dirKey, dir)
     def ckptFile(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.analyzed
         .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
@@ -81,7 +74,7 @@ class MaterializeSpec extends AnyFunSuite {
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
-    try {
+    try SparkTestSession.withConf(Materialize.modeKey -> "reliable", Materialize.dirKey -> dir) {
       // a checkpoint-per-round loop: each round checkpoints the next
       // frame from the current one, then releases the current one
       var cur = Materialize.checkpoint(spark.range(100).toDF("id"))
@@ -97,11 +90,7 @@ class MaterializeSpec extends AnyFunSuite {
       val left = released.filter(exists)
       assert(left.isEmpty, s"released checkpoint files remain:\n${left.mkString("\n")}")
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(cur)
-    } finally {
-      spark.conf.unset(Materialize.modeKey)
-      spark.conf.unset(Materialize.dirKey)
-      graft.operators.IndexFs.deleteTree(dir)
-    }
+    } finally graft.operators.IndexFs.deleteTree(dir)
   }
 
   test("an eager checkpoint runs one job and evaluates the frame once, in both modes") {
@@ -121,33 +110,16 @@ class MaterializeSpec extends AnyFunSuite {
       org.apache.spark.sql.graft.Bridge.releaseCheckpoint(ckpt)
       (jobs, evals.value)
     }
-    spark.conf.set(Materialize.dirKey, dir)
-    try {
+    try SparkTestSession.withConf(Materialize.dirKey -> dir) {
       assert(cost("local") === ((1, 1000L)))
       assert(cost("reliable") === ((1, 1000L)))
-    } finally {
-      spark.conf.unset(Materialize.modeKey)
-      spark.conf.unset(Materialize.dirKey)
-      graft.operators.IndexFs.deleteTree(dir)
-    }
+    } finally graft.operators.IndexFs.deleteTree(dir)
   }
 
   test("source audit: no operator calls localCheckpoint() directly") {
     // the seam is only a seam if every site goes through it
-    val root = Paths.get("src/main/scala/graft")
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "Materialize.scala")
-      .flatMap { p =>
-        new String(Files.readAllBytes(p), "UTF-8").linesIterator.zipWithIndex
-          .filter { case (l, _) =>
-            val t = l.trim
-            // skip pure comment lines; prose references are fine
-            !t.startsWith("//") && !t.startsWith("*") &&
-              t.contains(".localCheckpoint(")
-          }
-          .map { case (_, i) => s"$p:${i + 1}" }
-      }.toSeq
+    val offenders = SourceAudit.offenders("src/main/scala/graft", Set("Materialize.scala"))(
+      _.contains(".localCheckpoint("))
     assert(offenders.isEmpty,
       s"localCheckpoint outside the Materialize seam:\n${offenders.mkString("\n")}")
   }

@@ -73,8 +73,7 @@ class PinnedIndexSpec extends AnyFunSuite {
     val dir = freshIndex(1L)
     val p = new PinnedIndex(spark, dir, Seq("t"))
     IndexVersion.beginMutation(dir, "append")
-    spark.conf.set("spark.graft.serve.mutationWaitMs", "300")
-    try {
+    try SparkTestSession.withConf("spark.graft.serve.mutationWaitMs" -> "300") {
       val e = intercept[IllegalArgumentException] {
         writeTable(dir, 9L) // half a mutation: table moved, no bump
         IndexVersion.bump(dir)
@@ -82,10 +81,7 @@ class PinnedIndexSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("replay"),
         s"the refusal must tell the operator what to do: ${e.getMessage}")
-    } finally {
-      spark.conf.unset("spark.graft.serve.mutationWaitMs")
-      IndexVersion.endMutation(dir)
-    }
+    } finally IndexVersion.endMutation(dir)
     // once the (replayed) mutation clears the marker, serving resumes
     p.refreshIfStale()
     assert(value(p) === 9L)

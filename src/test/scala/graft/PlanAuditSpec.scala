@@ -244,10 +244,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("bucketed co-located join runs with no shuffle exchange") {
     import graft.operators.Scale
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force a non-broadcast join so bucketing is what kills the exchange
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // force a non-broadcast join so bucketing is what kills the exchange
+    try SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Scale.bucketTables(spark, sf, buckets = 4, prefix = "audit")
       val joined = Scale.bucketedJoin(spark, "audit")
       joined.collect() // finalize AQE
@@ -256,7 +254,6 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!joinSection.contains("Exchange hashpartitioning"),
         s"bucketed join still shuffles:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS audit_orders")
       spark.sql("DROP TABLE IF EXISTS audit_customer")
     }
@@ -267,15 +264,12 @@ class PlanAuditSpec extends AnyFunSuite {
     // shrink AQE's skew thresholds so the test-sized hot key (59k of 60k
     // rows on one join key) triggers the same re-plan a hot key at 100 TB
     // would — salting (Scale.saltedEventCounts) is the static counterpart
-    val confs = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    SparkTestSession.withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val left = spark.range(0, 60000).select(
         when(col("id") % 100 === 0, col("id") % 7).otherwise(lit(0L)).as("k"),
         col("id").as("payload"))
@@ -285,8 +279,6 @@ class PlanAuditSpec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not split the skewed partition:\n$plan")
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 

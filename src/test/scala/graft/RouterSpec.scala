@@ -93,16 +93,12 @@ class RouterSpec extends AnyFunSuite {
 
   test("cost constants are conf-overridable under spark.graft.router.*") {
     assert(Router.costsOf(spark) === Router.measuredCosts)
-    spark.conf.set("spark.graft.router.sbOpenMs", "77")
-    spark.conf.set("spark.graft.router.tokenNanos", "11")
-    try {
+    SparkTestSession.withConf("spark.graft.router.sbOpenMs" -> "77",
+        "spark.graft.router.tokenNanos" -> "11") {
       val c = Router.costsOf(spark)
       assert(c.sbOpenMs === 77L && c.tokenNanos === 11L)
       // un-overridden fields keep the measured defaults
       assert(c.scanFixedMs === Router.measuredCosts.scanFixedMs)
-    } finally {
-      spark.conf.unset("spark.graft.router.sbOpenMs")
-      spark.conf.unset("spark.graft.router.tokenNanos")
     }
   }
 
@@ -151,9 +147,8 @@ class RouterSpec extends AnyFunSuite {
     val idx = tmpDir("graft_router_terms_idx")
     PostingsIndex.buildFrom(spark, spark.read
       .parquet(s"$dir/documents.parquet"), idx, superBits = 2)
-    spark.conf.set("spark.graft.router.tokenNanos", "30000")
-    spark.conf.set("spark.graft.router.indexFixedMs", "1500")
-    try {
+    SparkTestSession.withConf("spark.graft.router.tokenNanos" -> "30000",
+        "spark.graft.router.indexFixedMs" -> "1500") {
       // 'needle': Σ df = 40 → the 2.4 s tokenize dwarfs the index's
       // 1.5 s fixed cost → indexed
       val rare = Router.bm25AutoOn(spark, dir, idx, Seq("needle"))
@@ -171,9 +166,6 @@ class RouterSpec extends AnyFunSuite {
       val pHeavy = plan(Router.bm25AutoOn(spark, dir, idx, heavy))
       assert(pHeavy.contains("documents.parquet") && !pHeavy.contains("blockstats"),
         s"a corpus-wide term set (Σ df ≈ total_len) must route to the scan:\n$pHeavy")
-    } finally {
-      spark.conf.unset("spark.graft.router.tokenNanos")
-      spark.conf.unset("spark.graft.router.indexFixedMs")
     }
   }
 
@@ -453,20 +445,13 @@ class RouterSpec extends AnyFunSuite {
   }
 
   test("calibrate(spark) measures this machine and installs the confs the deciders read") {
-    val before = Router.costsOf(spark)
-    val measured =
-      try Router.calibrate(spark)
-      finally () // confs restored below either way
-    try {
+    // the confs calibrate installs are put back afterwards
+    SparkTestSession.withConf() {
+      val measured = Router.calibrate(spark)
       assert(measured.tokenNanos >= 1L && measured.sbOpenMs >= 1L)
       assert(measured.scanFixedMs >= 0L && measured.indexFixedMs >= 0L)
       // the session now decides under the measured machine profile
       assert(Router.costsOf(spark) === measured)
-    } finally {
-      spark.conf.set("spark.graft.router.scanFixedMs", before.scanFixedMs.toString)
-      spark.conf.set("spark.graft.router.indexFixedMs", before.indexFixedMs.toString)
-      spark.conf.set("spark.graft.router.tokenNanos", before.tokenNanos.toString)
-      spark.conf.set("spark.graft.router.sbOpenMs", before.sbOpenMs.toString)
     }
   }
 
@@ -488,16 +473,12 @@ class RouterSpec extends AnyFunSuite {
     // distinctive values with this machine's real ones)
     val keys = Seq("scanFixedMs", "indexFixedMs", "tokenNanos", "sbOpenMs")
       .map(k => s"spark.graft.router.$k")
-    val before = keys.map(k => k -> spark.conf.getOption(k))
-    try {
+    SparkTestSession.withConf() {
       keys.foreach(spark.conf.unset)
       val got = Router.calibrateOrLoad(spark, stamp)
       assert(got === saved2)
       assert(Router.costsOf(spark) === saved2,
         "the loaded profile must be live in the session's deciders")
-    } finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
     assert(Router.loadCosts(s"$stamp.absent") === None)
   }

@@ -46,10 +46,9 @@ class StatsStateSpec extends AnyFunSuite {
     val li = Corpus.lineitem(spark, sf)
     val state = tmpState()
     Sketches.statsStateBuild(spark, li.where(col("l_orderkey") < 1000L), state)
-    spark.conf.set("spark.graft.analyze.hashMode", "xxhash64")
-    try Sketches.statsStateMerge(spark, state,
-      li.where(col("l_orderkey") >= 1000L))
-    finally spark.conf.unset("spark.graft.analyze.hashMode")
+    SparkTestSession.withConf("spark.graft.analyze.hashMode" -> "xxhash64") {
+      Sketches.statsStateMerge(spark, state, li.where(col("l_orderkey") >= 1000L))
+    }
     // if the conf had leaked into the merge, the md5 and xxhash64
     // register spaces would have max-merged and the estimate would
     // diverge from the pure-md5 recompute

@@ -27,11 +27,8 @@ class StoreAdvisorySpec extends AnyFunSuite {
 
   /** Run `f` with the provider conf unset (Spark's default = the
     * heap-map HDFSBackedStateStoreProvider), restoring after. */
-  private def onHeapStore[T](f: => T): T = {
-    val before = spark.conf.getOption(key)
-    spark.conf.unset(key)
-    try f finally before.foreach(spark.conf.set(key, _))
-  }
+  private def onHeapStore[T](f: => T): T =
+    SparkTestSession.withConf() { spark.conf.unset(key); f }
 
   test("corpus-coupled operators on the heap store emit the advisory, citing the measured trend") {
     implicit val sqlCtx = spark.sqlContext

@@ -94,12 +94,10 @@ class StreamLineScrubSpec extends AnyFunSuite {
   }
 
   test("same contract on the RocksDB state store") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runScenario()
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    SparkTestSession.withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      runScenario()
+    }
   }
 
   test("a replayed multi-doc micro-batch merges nothing into line df state") {

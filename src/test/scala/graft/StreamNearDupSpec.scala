@@ -149,22 +149,23 @@ class StreamNearDupSpec extends AnyFunSuite {
     // fMGWS → dedup chaining trips Spark's conservative global-watermark
     // check; safe here (see StreamNearDup.flagged scaladoc), so disable
     // for this query and restore after.
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    val q = out.writeStream.format("memory").queryName("graft_neardup_flagged")
-      .outputMode("append").start()
-    try {
-      in.addData(DocEvent(1L, original, ts(0)))
-      q.processAllAvailable()
-      in.addData(DocEvent(3L, original, ts(2)))
-      q.processAllAvailable()
-      // exact copy collides in all 4 bands but must surface exactly once
-      val rows = spark.table("graft_neardup_flagged").as[(Long, Long)]
-        .collect().toSeq
-      assert(rows === Seq((3L, 1L)), s"$rows")
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-      spark.sql("DROP VIEW IF EXISTS graft_neardup_flagged")
+    SparkTestSession.withConf(
+        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") {
+      val q = out.writeStream.format("memory").queryName("graft_neardup_flagged")
+        .outputMode("append").start()
+      try {
+        in.addData(DocEvent(1L, original, ts(0)))
+        q.processAllAvailable()
+        in.addData(DocEvent(3L, original, ts(2)))
+        q.processAllAvailable()
+        // exact copy collides in all 4 bands but must surface exactly once
+        val rows = spark.table("graft_neardup_flagged").as[(Long, Long)]
+          .collect().toSeq
+        assert(rows === Seq((3L, 1L)), s"$rows")
+      } finally {
+        q.stop()
+        spark.sql("DROP VIEW IF EXISTS graft_neardup_flagged")
+      }
     }
   }
 }

@@ -29,14 +29,8 @@ class WideRecallSpec extends AnyFunSuite {
     // an unmeetable target still returns the best measured floor
     assert(Similarity.wideParams(500L, 0.99) === ((8, 16)))
     // the conf rides into the self-sized entry
-    val key = "spark.graft.neardup.midRecallTarget"
-    val before = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "0.13")
+    SparkTestSession.withConf("spark.graft.neardup.midRecallTarget" -> "0.13") {
       assert(Similarity.midRecallTarget(spark) === 0.13)
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
