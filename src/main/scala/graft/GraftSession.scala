@@ -24,6 +24,9 @@ import org.apache.spark.sql.SparkSession
   * (`spark.sql.codegen.cache.maxEntries` = 4096; the reasoning and the
   * measurements sit at the setting). It is a static conf: the first
   * session built in a JVM fixes the cache size for every later one.
+  * It also routes streaming checkpoint files on the local filesystem
+  * through [[graft.streaming.CheckpointFiles]], so a local commit renames
+  * without forking a process.
   *
   * Library code reads the session conf and writes it only through
   * `Router.calibrate`/`calibrateOrLoad` and `RangeJoin.autoBandWidth`,
@@ -94,6 +97,23 @@ object GraftSession {
       // executors on a cluster (one cache per executor JVM) were not
       // checked.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Streaming checkpoint files (state store files, offset and commit
+      // logs) on file: go through Spark's FileSystem-based manager; other
+      // schemes keep Spark's choice (graft.streaming.CheckpointFiles).
+      // Spark's default FileContext manager renames via
+      // AbstractFileSystem.rename, which without native libhadoop forks
+      // `readlink` for the source, the destination and their .crc files:
+      // 46 of 63 process-spawn samples in a jstack sampling of the
+      // stream_ingest bench (4 vCPUs), all under renameTempFile. No
+      // atomicity is lost on file: renameInternal(src, dst, overwrite)
+      // checks the destination and then renames, as this manager's exists
+      // check + rename does, and an overwrite is one POSIX rename(2)
+      // instead of delete + rename. Spark's ChecksumCheckpointFileManager
+      // still wraps RocksDB's files. Hadoop's `chmod` per local create
+      // and RocksDB's `rm -rf` per old snapshot still fork; no library
+      // setting reaches them.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.CheckpointFiles].getName)
     val b1 = master.fold(b)(m => b.master(m))
     shufflePartitions.fold(b1)(n => b1.config("spark.sql.shuffle.partitions", n.toString))
   }

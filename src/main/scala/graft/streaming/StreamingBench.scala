@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.{AdEvent, Screen}
 
@@ -97,10 +98,47 @@ object StreamingBench {
     StreamEmbedDedup.VecEvent(n, v, new Timestamp(baseMs + n * 100L))
   }
 
-  /** Generic single-stream harness: returns (events processed, wall sec)
-    * for `batches` micro-batches of `mkBatch(batch, perBatch)` rows through
-    * `mkQuery`'s streaming plan. `outputMode` must match the plan ("update"
-    * for windowed aggs, "append" for the stateful operators). */
+  /** The feed loop every leg runs: `feed(b)` adds micro-batch `b`'s rows
+    * to the query's input streams and returns how many it added, then the
+    * query drains before the next batch. Returns (events fed, wall sec);
+    * the query is stopped and its memory-sink view (if any) dropped
+    * whatever happens. */
+  private def feedLoop(spark: SparkSession, q: StreamingQuery, batches: Int)(
+      feed: Int => Int): (Long, Double) =
+    try {
+      val t0 = System.nanoTime()
+      var events = 0L
+      (0 until batches).foreach { b =>
+        events += feed(b)
+        q.processAllAvailable()
+      }
+      (events, (System.nanoTime() - t0) / 1e9)
+    } finally {
+      q.stop()
+      Option(q.name).foreach(n => spark.sql(s"DROP VIEW IF EXISTS $n"))
+    }
+
+  /** Single-stream harness: `batches` micro-batches of
+    * `mkBatch(batch, perBatch)` rows through the query `start` launches
+    * on the input stream. */
+  private def throughput[T: Encoder](
+      spark: SparkSession,
+      start: Dataset[T] => StreamingQuery,
+      mkBatch: (Int, Int) => Seq[T],
+      batches: Int,
+      perBatch: Int): (Long, Double) = {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[T]
+    feedLoop(spark, start(in.toDS()), batches) { b =>
+      val evs = mkBatch(b, perBatch)
+      in.addData(evs)
+      evs.size
+    }
+  }
+
+  /** [[throughput]] of `mkQuery`'s plan into a memory sink. `outputMode`
+    * must match the plan ("update" for windowed aggs, "append" for the
+    * stateful operators). */
   private def throughputOf[T: Encoder](
       spark: SparkSession,
       mkQuery: Dataset[T] => DataFrame,
@@ -108,26 +146,12 @@ object StreamingBench {
       outputMode: String,
       queryName: String,
       batches: Int,
-      perBatch: Int): (Long, Double) = {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[T]
-    val q = mkQuery(in.toDS()).writeStream.format("memory").queryName(queryName)
-      .outputMode(outputMode).start()
-    try {
-      val t0 = System.nanoTime()
-      var events = 0L
-      (0 until batches).foreach { b =>
-        val evs = mkBatch(b, perBatch)
-        events += evs.size
-        in.addData(evs)
-        q.processAllAvailable()
-      }
-      (events, (System.nanoTime() - t0) / 1e9)
-    } finally {
-      q.stop()
-      spark.sql(s"DROP VIEW IF EXISTS $queryName")
-    }
-  }
+      perBatch: Int): (Long, Double) =
+    throughput[T](spark, ds => toMemory(mkQuery(ds), outputMode, queryName),
+      mkBatch, batches, perBatch)
+
+  private def toMemory(df: DataFrame, outputMode: String, queryName: String): StreamingQuery =
+    df.writeStream.format("memory").queryName(queryName).outputMode(outputMode).start()
 
   /** Build-once synthetic serving index for the `annserve` leg: 4096
     * dim-16 vectors over 16 cells, deterministic content, rebuilt only
@@ -166,31 +190,6 @@ object StreamingBench {
     dir
   }
 
-  /** [[throughputOf]] for operators that run as `foreachBatch` sinks
-    * (index serving): the leg supplies the started query, the harness
-    * owns only the feed loop and the clock. */
-  private def throughputForeach[T: Encoder](
-      spark: SparkSession,
-      start: Dataset[T] => org.apache.spark.sql.streaming.StreamingQuery,
-      mkBatch: (Int, Int) => Seq[T],
-      batches: Int,
-      perBatch: Int): (Long, Double) = {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[T]
-    val q = start(in.toDS())
-    try {
-      val t0 = System.nanoTime()
-      var events = 0L
-      (0 until batches).foreach { b =>
-        val evs = mkBatch(b, perBatch)
-        events += evs.size
-        in.addData(evs)
-        q.processAllAvailable()
-      }
-      (events, (System.nanoTime() - t0) / 1e9)
-    } finally q.stop()
-  }
-
   /** Two-stream harness for the join paths: both sides advance together,
     * one `mkLeft`/`mkRight` pair per micro-batch. Events counted = total
     * rows fed on both sides. */
@@ -206,23 +205,13 @@ object StreamingBench {
     implicit val sqlCtx = spark.sqlContext
     val left = MemoryStream[A]
     val right = MemoryStream[B]
-    val q = mkQuery(left.toDS(), right.toDS()).writeStream.format("memory")
-      .queryName(queryName).outputMode(outputMode).start()
-    try {
-      val t0 = System.nanoTime()
-      var events = 0L
-      (0 until batches).foreach { b =>
-        val l = mkLeft(b, perBatch)
-        val r = mkRight(b, perBatch)
-        events += l.size + r.size
-        if (l.nonEmpty) left.addData(l)
-        if (r.nonEmpty) right.addData(r)
-        q.processAllAvailable()
-      }
-      (events, (System.nanoTime() - t0) / 1e9)
-    } finally {
-      q.stop()
-      spark.sql(s"DROP VIEW IF EXISTS $queryName")
+    feedLoop(spark, toMemory(mkQuery(left.toDS(), right.toDS()), outputMode, queryName),
+        batches) { b =>
+      val l = mkLeft(b, perBatch)
+      val r = mkRight(b, perBatch)
+      if (l.nonEmpty) left.addData(l)
+      if (r.nonEmpty) right.addData(r)
+      l.size + r.size
     }
   }
 
@@ -243,15 +232,14 @@ object StreamingBench {
   private def legs(spark: SparkSession, batches: Int, perBatch: Int): Seq[Leg] = {
     import spark.implicits._
 
-    val adEvt = (b: Int, n: Int) => (0 until n).map(i => event(b.toLong * n + i, base))
+    // batch b of n rows carries the run's rows b*n until (b+1)*n
+    def rows[T](mk: Long => T) = (b: Int, n: Int) => (0 until n).map(i => mk(b.toLong * n + i))
+    val adEvt = rows(event(_, base))
     // 1 ms event spacing for the keyed-tuple paths: the whole run spans
     // batches*perBatch ms, so a generous TTL outlives it and GC timers
     // don't fire mid-measurement.
     val stateKeys = 200
-    def values(nKeys: Int) = (b: Int, n: Int) => (0 until n).map { i =>
-      val g = b.toLong * n + i
-      (s"k${g % nKeys}", s"v$g", new Timestamp(base + g)): (String, String, Timestamp)
-    }
+    def values(nKeys: Int) = rows(g => (s"k${g % nKeys}", s"v$g", new Timestamp(base + g)))
     // steady-state lookups: every key resolved at each batch's open, so
     // values flow through enriched — the hot path
     val earlyLookups = (b: Int, n: Int) => (0 until stateKeys).map { k =>
@@ -271,11 +259,8 @@ object StreamingBench {
     // cardinality; the bench's should be too. 100 ms timescale; with the
     // 30 s join TTL average match fan-out stays ~1.
     val screenIds = 2000
-    val intervalAds = (b: Int, n: Int) => (0 until n).map { i =>
-      val g = b.toLong * n + i
-      AdEvent(s"ad${g % 50}", s"screen${g % screenIds}",
-        if (g % 3 == 0) "Click" else "Impression", new Timestamp(base + g * 100L))
-    }
+    val intervalAds = rows(g => AdEvent(s"ad${g % 50}", s"screen${g % screenIds}",
+      if (g % 3 == 0) "Click" else "Impression", new Timestamp(base + g * 100L)))
     val screens = (b: Int, n: Int) => (0 until n / 20).map { i =>
       val g = b.toLong * n + i * 20
       // id from the screen-row index (g/20), not g: g is always a multiple
@@ -299,6 +284,16 @@ object StreamingBench {
     // appendValue). The delay spans the whole run's event time, so nothing
     // is ever late and GC timers (maxTs + 1 h TTL > watermark) stay quiet.
     val lookupWmDelay = "2 hours"
+    // Serving legs: ~1 query per 60 events of leg budget, floored at 1 so
+    // a small perBatch still issues work instead of an empty batch;
+    // query g's terms and vector are deterministic in g.
+    def servingQueries[T](mk: Long => T) = (b: Int, per: Int) => rows(mk)(b, math.max(1, per / 60))
+    def queryTerms(g: Long): Seq[String] =
+      (0 until 3).map(j => s"w${(g * 37 + j * 311) % 997}")
+    def queryVec(g: Long): Seq[Double] =
+      (0 until 16).map(j => ((g * 2654435761L + j * 40503L) % 1000).toDouble / 1000.0 + 0.001)
+    def servingCkpt(qn: String) = s"/tmp/graft_${qn}_ckpt_${System.nanoTime()}"
+    val collectAll: (DataFrame, Long) => Unit = (res, _) => { res.collect(); () }
 
     Seq(
       Leg("fixed", twsOnly = false, qn => throughputOf[AdEvent](spark,
@@ -317,8 +312,7 @@ object StreamingBench {
       // duplication planted so the collision path runs
       Leg("neardup", twsOnly = false, qn => throughputOf[StreamNearDup.DocEvent](spark,
         ds => StreamNearDup.candidates(ds, watermarkDelay = "2 hours").toDF(),
-        (b, per) => (0 until per).map(i => doc(b.toLong * per + i, base)),
-        "append", qn, batches, perBatch)),
+        rows(doc(_, base)), "append", qn, batches, perBatch)),
       // embedding near-dup at ingestion (r9): 1/4 batch size — each
       // event carries a 64-double vector, ~4× the byte width of the doc
       // legs' rows, and the driver-side MemoryStream ships the batch in
@@ -333,21 +327,17 @@ object StreamingBench {
       // per-row stateful streaming under the committed 8-band contract
       Leg("embdedup", twsOnly = false, qn => throughputOf[StreamEmbedDedup.VecEvent](spark,
         ds => StreamEmbedDedup.candidates(ds, watermarkDelay = "2 hours").toDF(),
-        (b, per) => {
-          val n = math.max(1, per / 4)
-          (0 until n).map(i => vecDoc(b.toLong * n + i, base))
-        }, "append", qn, batches, perBatch)),
+        (b, per) => rows(vecDoc(_, base))(b, math.max(1, per / 4)),
+        "append", qn, batches, perBatch)),
       // boilerplate line-scrub at ingestion (r9): docs, 3 lines each
       Leg("linescrub", twsOnly = false, qn => throughputOf[StreamLineScrub.DocEvent](spark,
         ds => StreamLineScrub.flagged(ds, watermarkDelay = "2 hours").toDF(),
-        (b, per) => (0 until per).map(i => lineDoc(b.toLong * per + i, base)),
-        "append", qn, batches, perBatch)),
+        rows(lineDoc(_, base)), "append", qn, batches, perBatch)),
       // media near-dup at ingestion (r10): payload dies at the signature
       // map; only 4 band rows per item shuffle
       Leg("mediadedup", twsOnly = false, qn => throughputOf[StreamMediaNearDup.MediaEvent](spark,
         ds => StreamMediaNearDup.candidates(ds, watermarkDelay = "2 hours").toDF(),
-        (b, per) => (0 until per).map(i => mediaDoc(b.toLong * per + i, base)),
-        "append", qn, batches, perBatch)),
+        rows(mediaDoc(_, base)), "append", qn, batches, perBatch)),
       // contamination span-scrub at ingestion (r10): STATELESS — no state
       // store, no watermark; the leg prices the probe+cut+rebuild kernel
       Leg("contamscrub", twsOnly = false, qn => throughputOf[StreamNearDup.DocEvent](spark,
@@ -355,8 +345,7 @@ object StreamingBench {
           ds.select(org.apache.spark.sql.functions.col("docId").as("doc_id"),
             org.apache.spark.sql.functions.col("text")),
           spark.createDataFrame(Seq((0L, benchPhrase))).toDF("doc_id", "text")).toDF(),
-        (b, per) => (0 until per).map(i => contamDoc(b.toLong * per + i, base)),
-        "append", qn, batches, perBatch)),
+        rows(contamDoc(_, base)), "append", qn, batches, perBatch)),
       // full retention verdict at ingestion (r10): fingerprint + lang-id
       // + quality signals per doc, one first-arrival bit of state per
       // distinct fingerprint; duplicates planted every 10th doc so the
@@ -364,11 +353,9 @@ object StreamingBench {
       Leg("curation", twsOnly = false, qn => throughputOf[(Long, String)](spark,
         ds => CurationStream.retention(
           ds.toDF("doc_id", "text")).toDF(),
-        (b, per) => (0 until per).map { i =>
-          val g = b.toLong * per + i
+        rows { g =>
           val src = if (g % 10 == 9) g - 9 else g
           (g, (0 until 25).map(j => s"w${(src * 31 + j * 7) % 997}").mkString(" "))
-            : (Long, String)
         }, "append", qn, batches, perBatch)),
       // entity resolution at ingestion (r10): per-block membership as
       // state (vocabulary-bounded — 3200 distinct names over 64 blocks
@@ -378,11 +365,9 @@ object StreamingBench {
       Leg("entity", twsOnly = false, qn => throughputOf[(Long, String)](spark,
         ds => StreamEntityResolve.resolve(spark,
           ds.toDF("p_partkey", "p_name")).toDF(),
-        (b, per) => (0 until per).map { i =>
-          val g = b.toLong * per + i
-          val blk = g % 64
+        rows { g =>
           val v = (g / 64) % 50
-          (g, s"v${v / 5}a${v % 5} blk$blk"): (Long, String)
+          (g, s"v${v / 5}a${v % 5} blk${g % 64}")
         }, "update", qn, batches, perBatch)),
       // at-ingestion ANALYZE (r10): five column-states total, each 256
       // register slots + counts + bounds; every event explodes to 5
@@ -391,34 +376,23 @@ object StreamingBench {
       Leg("stats", twsOnly = false, qn => throughputOf[(Long, Long, String, String, String)](spark,
         ds => StreamStats.stats(spark, ds.toDF("l_orderkey", "l_suppkey",
           "l_linestatus", "l_returnflag", "l_shipdate")),
-        (b, per) => (0 until per).map { i =>
-          val g = b.toLong * per + i
-          (g, g % 997, if (g % 2 == 0) "O" else "F",
-            if (g % 3 == 0) "R" else "N",
-            f"1995-${g % 12 + 1}%02d-${g % 28 + 1}%02d")
-            : (Long, Long, String, String, String)
-        }, "update", qn, batches, perBatch)),
+        rows(g => (g, g % 997, if (g % 2 == 0) "O" else "F", if (g % 3 == 0) "R" else "N",
+          f"1995-${g % 12 + 1}%02d-${g % 28 + 1}%02d")), "update", qn, batches, perBatch)),
       // ingest-volume anomaly monitor at ingestion (r10): per-type
       // running moments (3 exact longs) + open-day counters as state;
       // day closures ride the watermark — ~1.4 days close per batch at
       // this tick rate, so the close path runs hot
       Leg("anomaly", twsOnly = false, qn => throughputOf[(String, Timestamp)](spark,
         ds => StreamAnomaly.verdicts(ds.toDF("event_type", "ts")).toDF(),
-        (b, per) => (0 until per).map { i =>
-          val g = b.toLong * per + i
-          (s"src${g % 64}", new Timestamp(base + g * 2000L)): (String, Timestamp)
-        }, "append", qn, batches, perBatch)),
+        rows(g => (s"src${g % 64}", new Timestamp(base + g * 2000L))), "append", qn, batches, perBatch)),
       // per-source trending terms (r10): the Space-Saving buffer as
       // streaming aggregation state — one ≤capacity-slot sketch per
       // source, update mode
       Leg("topterms", twsOnly = false, qn => throughputOf[(String, String)](spark,
         ds => TopTermsStream.topTerms(ds.toDF("source", "text")),
-        (b, per) => (0 until per).map { i =>
-          val g = b.toLong * per + i
-          (s"src${g % 64}",
-            (0 until 8).map(j => s"t${(g * 13 + j * 5) % 499}").mkString(" "))
-            : (String, String)
-        }, "update", qn, batches, perBatch)),
+        rows(g => (s"src${g % 64}",
+          (0 until 8).map(j => s"t${(g * 13 + j * 5) % 499}").mkString(" "))),
+        "update", qn, batches, perBatch)),
       // streamed ANN serving (r10): every trigger runs the audited batch
       // plan via foreachBatch — probe broadcast + DPP-pruned members
       // scan (StreamAnnServe's scaladoc has the why). Queries at 1/60
@@ -426,48 +400,21 @@ object StreamingBench {
       // ~512 candidates (2 probed cells x 256 members), not a row update
       Leg("annserve", twsOnly = false, qn => {
         val idxDir = annServeIndex(spark)
-        throughputForeach[(Long, Seq[Double])](spark,
-          ds => StreamAnnServe.serve(spark, idxDir,
-            ds.toDF("query_id", "qv"),
-            s"/tmp/graft_${qn}_ckpt_${System.nanoTime()}")(
-            (res, _) => { res.collect(); () }),
-          (b, per) => {
-            // ~1 query per 60 events of leg budget, floored at 1 so a
-            // small perBatch still issues work instead of an empty batch
-            val qper = math.max(1, per / 60)
-            (0 until qper).map { i =>
-              val g = b.toLong * qper + i
-              (1000000000L + g,
-                (0 until 16).map(j =>
-                  ((g * 2654435761L + j * 40503L) % 1000).toDouble / 1000.0
-                    + 0.001): Seq[Double])
-            }
-          }, batches, perBatch)
+        throughput[(Long, Seq[Double])](spark,
+          ds => StreamAnnServe.serve(spark, idxDir, ds.toDF("query_id", "qv"),
+            servingCkpt(qn))(collectAll),
+          servingQueries(g => (1000000000L + g, queryVec(g))), batches, perBatch)
       }),
-      // weighted reservoir at ingestion (r10): a streaming aggregation
-      // whose state is the ≤2k-entry top-k buffer per source — the leg
-      // prices priority computation + map-side partial top-k + state
-      // merge for 64 sources
       // lexical serving at ingestion (r11): per-trigger term-pruned
       // postings reads, the ANN serving leg's BM25 twin — each query is
       // a 3-term search over the 997-term vocabulary, ~1 query per 60
       // events of leg budget (the annserve exchange rate)
       Leg("bm25serve", twsOnly = false, qn => {
         val idxDir = bm25ServeIndex(spark)
-        throughputForeach[(Long, Seq[String])](spark,
-          ds => StreamBm25Serve.serve(spark, idxDir,
-            ds.toDF("query_id", "terms"),
-            s"/tmp/graft_${qn}_ckpt_${System.nanoTime()}")(
-            (res, _) => { res.collect(); () }),
-          (b, per) => {
-            val qper = math.max(1, per / 60)
-            (0 until qper).map { i =>
-              val g = b.toLong * qper + i
-              (2000000000L + g,
-                (0 until 3).map(j =>
-                  s"w${(g * 37 + j * 311) % 997}"): Seq[String])
-            }
-          }, batches, perBatch)
+        throughput[(Long, Seq[String])](spark,
+          ds => StreamBm25Serve.serve(spark, idxDir, ds.toDF("query_id", "terms"),
+            servingCkpt(qn))(collectAll),
+          servingQueries(g => (2000000000L + g, queryTerms(g))), batches, perBatch)
       }),
       // fused serving at ingestion (r12): BOTH indexes answered per
       // trigger through the single-sourced rrfFuse tail — term-pruned
@@ -479,40 +426,27 @@ object StreamingBench {
       Leg("hybridserve", twsOnly = false, qn => {
         val pidx = bm25ServeIndex(spark)
         val vidx = annServeIndex(spark)
-        throughputForeach[(Long, Seq[String], Seq[Double])](spark,
+        throughput[(Long, Seq[String], Seq[Double])](spark,
           ds => StreamHybridServe.serve(spark, pidx, vidx,
-            ds.toDF("query_id", "terms", "qv"),
-            s"/tmp/graft_${qn}_ckpt_${System.nanoTime()}")(
-            (res, _) => { res.collect(); () }),
-          (b, per) => {
-            val qper = math.max(1, per / 60)
-            (0 until qper).map { i =>
-              val g = b.toLong * qper + i
-              (3000000000L + g,
-                (0 until 3).map(j =>
-                  s"w${(g * 37 + j * 311) % 997}"): Seq[String],
-                (0 until 16).map(j =>
-                  ((g * 2654435761L + j * 40503L) % 1000).toDouble / 1000.0
-                    + 0.001): Seq[Double])
-            }
-          }, batches, perBatch)
+            ds.toDF("query_id", "terms", "qv"), servingCkpt(qn))(collectAll),
+          servingQueries(g => (3000000000L + g, queryTerms(g), queryVec(g))),
+          batches, perBatch)
       }),
+      // weighted reservoir at ingestion (r10): a streaming aggregation
+      // whose state is the ≤2k-entry top-k buffer per source — the leg
+      // prices priority computation + map-side partial top-k + state
+      // merge for 64 sources
       Leg("wsample", twsOnly = false, qn => throughputOf[(String, Long, Long)](spark,
         ds => StreamWeightedSample.picks(
           ds.toDF("source", "doc_id", "n_chars")),
-        (b, per) => (0 until per).map { i =>
-          val g = b.toLong * per + i
-          (s"src${g % 64}", g, g % 997 + 1): (String, Long, Long)
-        }, "update", qn, batches, perBatch)),
+        rows(g => (s"src${g % 64}", g, g % 997 + 1)), "update", qn, batches, perBatch)),
       // sequence packing at ingestion (r10): one long of state per
       // writer; the leg prices the per-batch sort + offset assignment
       // for 64 writers
       Leg("pack", twsOnly = false, qn => throughputOf[StreamPack.DocEvent](spark,
         ds => StreamPack.offsets(ds),
-        (b, per) => (0 until per).map { i =>
-          val g = b.toLong * per + i
-          StreamPack.DocEvent(s"src${g % 64}", g, g % 997 + 1, new Timestamp(base + g))
-        }, "append", qn, batches, perBatch)),
+        rows(g => StreamPack.DocEvent(s"src${g % 64}", g, g % 997 + 1, new Timestamp(base + g))),
+        "append", qn, batches, perBatch)),
       Leg("repeat", twsOnly = false, qn => throughputOf[(String, String, Timestamp)](spark,
         ds => Repeater.repeat(wm(ds), repeatIntervalMs, repeatTtlMs).toDF(),
         values(50), "append", qn, batches, perBatch)),

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -208,6 +208,64 @@ class CheckpointRestartSpec extends AnyFunSuite {
       ("ad3", Some("pub2")), ("ad4", None)), s"unexpected clean output: $clean")
     assert(intervalRun(interrupt = true) === clean,
       "restarted interval join diverged from the uninterrupted run")
+  }
+
+  // ------------------------------------- checkpoint file manager switch
+
+  /** A RocksDB dedup over a parquet file source, 4 micro-batches; each
+    * batch repeats a key of the batch before. `managers` names the
+    * checkpoint file manager per run: one entry runs the 4 batches
+    * uninterrupted on the graft session, two entries stop after batch 2
+    * and restart on a child session pinned to the second manager. The
+    * source log, offset/commit logs, state and sink log all carry over. */
+  private def managerSwitchRun(managers: String*): Seq[(String, Long)] = {
+    import graft.model.AdEvent
+    val dir = tmp(s"ckpt-switch-${managers.map(_.split('.').last).mkString("-")}")
+    val batches = Seq(Seq("a1" -> "12:00:00", "a2" -> "12:00:01"),
+      Seq("a1" -> "12:00:02", "a3" -> "12:00:03"),
+      Seq("a2" -> "12:00:04", "a4" -> "12:00:05"),
+      Seq("a3" -> "12:00:06", "a5" -> "12:00:07"))
+    def session(manager: String): SparkSession = {
+      val c = spark.newSession()
+      c.conf.set("spark.sql.streaming.checkpointFileManagerClass", manager)
+      c
+    }
+    def addBatch(b: Seq[(String, String)]): Unit = {
+      import spark.implicits._
+      b.map { case (id, t) => AdEvent(id, "s1", "Click", ts(t)) }.toDS()
+        .write.mode("append").parquet(s"$dir/in")
+    }
+    def run(s: SparkSession, bs: Seq[Seq[(String, String)]]): Unit = {
+      import s.implicits._
+      val in = s.readStream.schema(Encoders.product[AdEvent].schema)
+        .parquet(s"$dir/in").as[AdEvent]
+      val q = graft.streaming.StreamDedup.dedupEvents(in).writeStream.format("parquet")
+        .option("path", s"$dir/out")
+        .option("checkpointLocation", s"$dir/ckpt")
+        .outputMode("append").start()
+      try bs.foreach { b => addBatch(b); q.processAllAvailable() } finally q.stop()
+    }
+    Files.createDirectories(java.nio.file.Paths.get(dir, "in"))
+    val phases = if (managers.size == 1) Seq(batches) else Seq(batches.take(2), batches.drop(2))
+    managers.zip(phases).foreach { case (m, bs) => run(session(m), bs) }
+    import spark.implicits._
+    spark.read.parquet(s"$dir/out").select("id", "ts").as[(String, Timestamp)]
+      .collect().toSeq.map { case (id, t) => (id, t.getTime) }.sorted
+  }
+
+  test("a checkpoint restarts across the FileContext-based and the graft file managers") {
+    val fileContext = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileContextBasedCheckpointFileManager"
+    val graftFiles = classOf[graft.streaming.CheckpointFiles].getName
+    val clean = managerSwitchRun(graftFiles)
+    // first arrivals only: a repeat after the restart needs the recovered state
+    assert(clean === Seq("a1" -> "12:00:00", "a2" -> "12:00:01", "a3" -> "12:00:03",
+      "a4" -> "12:00:05", "a5" -> "12:00:07").map { case (id, t) => (id, ts(t).getTime) },
+      s"unexpected clean output: $clean")
+    assert(managerSwitchRun(fileContext, graftFiles) === clean,
+      "FileContext-written checkpoint restarted on CheckpointFiles diverged")
+    assert(managerSwitchRun(graftFiles, fileContext) === clean,
+      "CheckpointFiles-written checkpoint restarted on FileContext diverged")
   }
 
   test("repeater recovers its event-time timers from the checkpoint (fMGWS)") {
