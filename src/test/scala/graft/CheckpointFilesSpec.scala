@@ -6,7 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -51,12 +52,64 @@ class CheckpointFilesSpec extends AnyFunSuite {
     assert(fm.isInstanceOf[CheckpointFiles])
   }
 
+  /** The FileSystem under the local delegate of a manager on `dir`
+    * (the manager's `fs` is Scala-protected, public in bytecode). */
+  private def localFs(dir: String, conf: Configuration): FileSystem = {
+    val fm = new CheckpointFiles(new Path(dir), conf).delegate
+    classOf[FileSystemBasedCheckpointFileManager].getMethod("fs").invoke(fm).asInstanceOf[FileSystem]
+  }
+
   test("local paths, with or without a scheme, go through the FileSystem-based manager") {
     val dir = tmp()
     for (p <- Seq(s"file://$dir", dir)) {
       val fm = new CheckpointFiles(new Path(p), hadoopConf())
       assert(fm.delegate.isInstanceOf[FileSystemBasedCheckpointFileManager], p)
+      // by name, so the same assertion runs against a build without the class
+      assert(localFs(p, hadoopConf()).getClass.getName ===
+        "graft.streaming.NoForkLocalFileSystem", p)
     }
+  }
+
+  private def perms(f: File): String =
+    java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(f.toPath))
+
+  test("local creates, mkdirs and setPermission give what Hadoop's chmod gives") {
+    /** A file (with its .crc) and a directory made through `fs`, and
+      * `fs.setPermission` on a file made outside it; name -> rwx string. */
+    def apply(fs: FileSystem, dir: String, perm: FsPermission): Map[String, String] = {
+      fs.create(new Path(dir, "f"), perm, false, 4096, 1.toShort, 1L << 20, null).close()
+      assert(fs.mkdirs(new Path(dir, "d"), perm))
+      Files.createFile(new File(dir, "s").toPath)
+      fs.setPermission(new Path(dir, "s"), perm)
+      new File(dir).listFiles().map(f => f.getName -> perms(f)).toMap
+    }
+    for (umask <- Seq(None, Some("077")); mode <- Seq(0x1a4, 0x180, 0x1ed, 0x1c0, 0x1ff)) {
+      // 0644, 0600, 0755, 0700, 0777
+      val conf = hadoopConf()
+      umask.foreach(conf.set("fs.permissions.umask-mode", _))
+      val perm = new FsPermission(mode.toShort)
+      val dir = tmp()
+      val ours = apply(localFs(dir, conf), dir, perm)
+      // Hadoop's stock LocalFileSystem: RawLocalFileSystem.setPermission forks chmod
+      val stock = new LocalFileSystem
+      stock.initialize(URI.create("file:///"), conf)
+      val theirs = apply(stock, tmp(), perm)
+      assert(ours.keySet === Set("f", ".f.crc", "d", "s"))
+      // mkdirs applies the umask
+      if (umask.nonEmpty) assert(ours("d").endsWith("------"), ours)
+      assert(ours === theirs, f"umask ${umask.getOrElse("default")}, mode 0$mode%o")
+    }
+  }
+
+  test("a mode with the sticky bit takes Hadoop's chmod path") {
+    val dir = tmp()
+    val fs = localFs(dir, hadoopConf())
+    val d = new Path(dir, "d")
+    assert(fs.mkdirs(d, new FsPermission(0x1ed.toShort)))
+    fs.setPermission(d, new FsPermission(0x3ed.toShort)) // 01755
+    // the nio permission set has no sticky bit; only chmod sets it
+    val unixMode = Files.getAttribute(new File(dir, "d").toPath, "unix:mode").asInstanceOf[Int]
+    assert((unixMode & 0xfff) === 0x3ed, f"mode 0${unixMode & 0xfff}%o")
   }
 
   test("any other scheme gets the manager Spark picks without the key") {

@@ -212,60 +212,130 @@ class CheckpointRestartSpec extends AnyFunSuite {
 
   // ------------------------------------- checkpoint file manager switch
 
-  /** A RocksDB dedup over a parquet file source, 4 micro-batches; each
-    * batch repeats a key of the batch before. `managers` names the
-    * checkpoint file manager per run: one entry runs the 4 batches
-    * uninterrupted on the graft session, two entries stop after batch 2
-    * and restart on a child session pinned to the second manager. The
-    * source log, offset/commit logs, state and sink log all carry over. */
-  private def managerSwitchRun(managers: String*): Seq[(String, Long)] = {
+  /** Each batch after the first repeats a key of an earlier batch. */
+  private val dedupBatches = Seq(Seq("a1" -> "12:00:00", "a2" -> "12:00:01"),
+    Seq("a1" -> "12:00:02", "a3" -> "12:00:03"),
+    Seq("a2" -> "12:00:04", "a4" -> "12:00:05"),
+    Seq("a3" -> "12:00:06", "a5" -> "12:00:07"),
+    Seq("a4" -> "12:00:08", "a6" -> "12:00:09"),
+    Seq("a6" -> "12:00:10", "a7" -> "12:00:11"))
+
+  /** First arrivals only: a repeat after a restart needs the recovered state. */
+  private def firstArrivals(n: Int): Seq[(String, Long)] =
+    dedupBatches.take(n).flatten.groupBy(_._1).values.map(_.head).toSeq
+      .map { case (id, t) => (id, ts(t).getTime) }.sorted
+
+  /** A RocksDB dedup over the parquet file source `dir/in`, checkpointed at
+    * `dir/ckpt`, run on `s` for one micro-batch per entry of `batches` and
+    * stopped. A second call on the same `dir` restarts it: the source log,
+    * offset/commit logs, state and sink log all carry over. Returns the
+    * sink's rows so far. */
+  private def dedupRun(dir: String, s: SparkSession, batches: Seq[Seq[(String, String)]])
+      : Seq[(String, Long)] = {
     import graft.model.AdEvent
-    val dir = tmp(s"ckpt-switch-${managers.map(_.split('.').last).mkString("-")}")
-    val batches = Seq(Seq("a1" -> "12:00:00", "a2" -> "12:00:01"),
-      Seq("a1" -> "12:00:02", "a3" -> "12:00:03"),
-      Seq("a2" -> "12:00:04", "a4" -> "12:00:05"),
-      Seq("a3" -> "12:00:06", "a5" -> "12:00:07"))
-    def session(manager: String): SparkSession = {
-      val c = spark.newSession()
-      c.conf.set("spark.sql.streaming.checkpointFileManagerClass", manager)
-      c
-    }
-    def addBatch(b: Seq[(String, String)]): Unit = {
-      import spark.implicits._
+    import s.implicits._
+    Files.createDirectories(java.nio.file.Paths.get(dir, "in"))
+    val in = s.readStream.schema(Encoders.product[AdEvent].schema)
+      .parquet(s"$dir/in").as[AdEvent]
+    val q = graft.streaming.StreamDedup.dedupEvents(in).writeStream.format("parquet")
+      .option("path", s"$dir/out")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .outputMode("append").start()
+    try batches.foreach { b =>
       b.map { case (id, t) => AdEvent(id, "s1", "Click", ts(t)) }.toDS()
         .write.mode("append").parquet(s"$dir/in")
-    }
-    def run(s: SparkSession, bs: Seq[Seq[(String, String)]]): Unit = {
-      import s.implicits._
-      val in = s.readStream.schema(Encoders.product[AdEvent].schema)
-        .parquet(s"$dir/in").as[AdEvent]
-      val q = graft.streaming.StreamDedup.dedupEvents(in).writeStream.format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode("append").start()
-      try bs.foreach { b => addBatch(b); q.processAllAvailable() } finally q.stop()
-    }
-    Files.createDirectories(java.nio.file.Paths.get(dir, "in"))
-    val phases = if (managers.size == 1) Seq(batches) else Seq(batches.take(2), batches.drop(2))
-    managers.zip(phases).foreach { case (m, bs) => run(session(m), bs) }
-    import spark.implicits._
-    spark.read.parquet(s"$dir/out").select("id", "ts").as[(String, Timestamp)]
+      q.processAllAvailable()
+    } finally q.stop()
+    s.read.parquet(s"$dir/out").select("id", "ts").as[(String, Timestamp)]
       .collect().toSeq.map { case (id, t) => (id, t.getTime) }.sorted
   }
 
+  /** The first 4 dedup batches with `key` set per run on a child session:
+    * one value runs them uninterrupted, two stop after batch 2 and restart
+    * on a child with the second value. */
+  private def switchRun(key: String, values: String*): Seq[(String, Long)] = {
+    val dir = tmp(s"ckpt-switch-${values.map(_.split('.').last).mkString("-")}")
+    def session(value: String): SparkSession = {
+      val c = spark.newSession()
+      c.conf.set(key, value)
+      c
+    }
+    val batches = dedupBatches.take(4)
+    val phases = if (values.size == 1) Seq(batches) else Seq(batches.take(2), batches.drop(2))
+    values.zip(phases).map { case (v, bs) => dedupRun(dir, session(v), bs) }.last
+  }
+
   test("a checkpoint restarts across the FileContext-based and the graft file managers") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
     val fileContext = "org.apache.spark.sql.execution.streaming.checkpointing." +
       "FileContextBasedCheckpointFileManager"
     val graftFiles = classOf[graft.streaming.CheckpointFiles].getName
-    val clean = managerSwitchRun(graftFiles)
-    // first arrivals only: a repeat after the restart needs the recovered state
-    assert(clean === Seq("a1" -> "12:00:00", "a2" -> "12:00:01", "a3" -> "12:00:03",
-      "a4" -> "12:00:05", "a5" -> "12:00:07").map { case (id, t) => (id, ts(t).getTime) },
-      s"unexpected clean output: $clean")
-    assert(managerSwitchRun(fileContext, graftFiles) === clean,
+    val clean = switchRun(key, graftFiles)
+    assert(clean === firstArrivals(4), s"unexpected clean output: $clean")
+    assert(switchRun(key, fileContext, graftFiles) === clean,
       "FileContext-written checkpoint restarted on CheckpointFiles diverged")
-    assert(managerSwitchRun(graftFiles, fileContext) === clean,
+    assert(switchRun(key, graftFiles, fileContext) === clean,
       "CheckpointFiles-written checkpoint restarted on FileContext diverged")
+  }
+
+  // ------------------------------------------ RocksDB changelog checkpoints
+
+  private val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** File names in each partition directory of the dedup's state store. */
+  private def stateFiles(dir: String): Seq[Set[String]] = {
+    val parts = new java.io.File(s"$dir/ckpt/state/0").listFiles()
+      .filter(f => f.isDirectory && f.getName.forall(_.isDigit))
+    assert(parts.nonEmpty, s"no state partitions under $dir/ckpt/state/0")
+    parts.toSeq.map(_.list().toSet)
+  }
+
+  test("the graft session's RocksDB commits write changelogs, not snapshots") {
+    val dir = tmp("ckpt-changelog")
+    assert(dedupRun(dir, spark, dedupBatches.take(3)) === firstArrivals(3))
+    for (names <- stateFiles(dir)) {
+      assert((1 to 3).forall(v => names(s"$v.changelog")), s"missing changelogs: $names")
+      assert(!(1 to 3).exists(v => names(s"$v.zip")), s"snapshot on commit: $names")
+    }
+  }
+
+  test("a checkpoint restarts across RocksDB changelog checkpointing off and on") {
+    val clean = switchRun(changelogKey, "true")
+    assert(clean === firstArrivals(4), s"unexpected clean output: $clean")
+    assert(switchRun(changelogKey, "false", "true") === clean,
+      "snapshot-only checkpoint restarted with changelogs diverged")
+    assert(switchRun(changelogKey, "true", "false") === clean,
+      "changelog checkpoint restarted without changelogs diverged")
+  }
+
+  test("a changelog checkpoint restarts from a snapshot and the changelogs after it") {
+    import org.apache.spark.sql.execution.streaming.state.StateStore
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // one state version per batch (no watermark-only batches); the
+    // maintenance thread that uploads snapshots runs every 100 ms
+    SparkTestSession.withConf(
+        "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "2",
+        "spark.sql.streaming.stateStore.maintenanceInterval" -> "100ms",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      // a running maintenance task keeps the interval it started with; the
+      // next store load starts it again with the session's
+      StateStore.stopMaintenanceTask()
+      try {
+        val clean = dedupRun(tmp("ckpt-snap-clean"), spark, dedupBatches)
+        assert(clean === firstArrivals(6), s"unexpected clean output: $clean")
+        val dir = tmp("ckpt-snap-restart")
+        dedupRun(dir, spark, dedupBatches.take(5))
+        // recovery of version 5 loads a snapshot below it and replays the rest
+        eventually(timeout(60.seconds), interval(100.millis)) {
+          for (names <- stateFiles(dir))
+            assert(names("5.changelog") && Seq(2, 4).exists(v => names(s"$v.zip")),
+              s"no snapshot to load: $names")
+        }
+        assert(dedupRun(dir, spark, dedupBatches.drop(5)) === clean,
+          "restart from snapshot + changelogs diverged")
+      } finally StateStore.stopMaintenanceTask()
+    }
   }
 
   test("repeater recovers its event-time timers from the checkpoint (fMGWS)") {
