@@ -65,12 +65,11 @@ object Bench {
     score
   }
 
-  /** Frees executor-heap residue between suites: cached plans plus any
+  /** Frees executor-heap residue between passes: cached plans plus any
     * still-pinned `localCheckpoint` blocks whose owning frames went out of
     * scope before the ContextCleaner noticed. Keeps one pass's storage
-    * from inflating the next pass's GC pressure (round-5 verdict: the
-    * default-store streaming legs collapsed 4-25x in a JVM that had just
-    * run 150 batch queries). */
+    * from inflating the next pass's GC pressure (in round 5, work run
+    * after 150 batch queries collapsed 4-25x on their heap residue). */
   private def releaseHeap(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
@@ -85,25 +84,11 @@ object Bench {
     val loadStart = loadavg()
     SparkEntry.warmUp(spark, sfDir)
     val only = SparkEntry.onlyFromEnv
-    // machine-speed score, measured JVM-warm before any suite runs —
-    // full runs only (like the streaming/bucketed/relayout sections): a
-    // SPARK_GRAFT_ONLY dev iteration shouldn't pay 3 calibration rounds
-    // for a number the ledger only uses on full-suite totals (0.0 =
-    // not measured)
+    // machine-speed score, measured JVM-warm before the timed passes —
+    // full runs only: a SPARK_GRAFT_ONLY dev iteration shouldn't pay 3
+    // calibration rounds for a number the ledger only uses on full-suite
+    // totals (0.0 = not measured)
     val calibSec = if (only.isEmpty) calibrate(spark) else 0.0
-    releaseHeap(spark)
-    // Streaming legs run FIRST, in a JVM that has executed nothing but the
-    // warm-up — r5's artifact ran them last, after 150 batch queries whose
-    // heap residue collapsed the default-store (heap-map) legs 4-25x while
-    // RocksDB legs in the same run held up (round-5 verdict, Wrong #1).
-    // Wrapped in Try so a streaming failure can't lose the batch results.
-    val streaming = if (only.isEmpty) {
-      Try(graft.streaming.StreamingBench.allPaths(spark)) match {
-        case Success(j) => s""","streaming":$j"""
-        case Failure(e) =>
-          s""","streaming":{"err":"${jsonEscape(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}"}"""
-      }
-    } else ""
     releaseHeap(spark)
     // Timed action: a NOOP-sink write, NOT count() — count lets Catalyst
     // prune every subtree whose output the count never reads, and the
@@ -114,10 +99,10 @@ object Bench {
     // evaluates and discards every row — the cost a real consumer pays —
     // with no driver collect. One-time ledger re-baseline documented in
     // BASELINE.md ("Honest bench re-baseline").
-    def runOnce(dir: String): Seq[(String, Timed)] = SparkEntry.selected(only)
+    def runOnce(): Seq[(String, Timed)] = SparkEntry.selected(only)
       .map { case (name, fn) =>
         val t0 = System.nanoTime()
-        val err = Try(fn(spark, dir).write.format("noop").mode("overwrite").save()) match {
+        val err = Try(fn(spark, sfDir).write.format("noop").mode("overwrite").save()) match {
           case Success(_) => None
           case Failure(e) => Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
         }
@@ -126,10 +111,9 @@ object Bench {
     // two passes, per-query min: the first run absorbs codegen/JIT/parquet
     // footer caching fixed costs, so the min is the steady-state number and
     // round-over-round deltas are signal, not first-run noise (BASELINE.md)
-    val cold = runOnce(sfDir)
+    val cold = runOnce()
     releaseHeap(spark)
-    val warm = runOnce(sfDir)
-    releaseHeap(spark)
+    val warm = runOnce()
     val results = cold.zip(warm).map { case ((n, a), (_, b)) =>
       // When exactly one pass failed, a fast failure must not masquerade as
       // the steady-state time — report the successful pass's duration.
@@ -163,74 +147,14 @@ object Bench {
     // each pass's own sum next to the per-query-min `value`: a pass
     // poisoned by a degrading heap shows on its own
     val passTotals = Seq(cold, warm).map(p => r3(p.map(_._2.sec).sum)).mkString("[", ",", "]")
-    // Bucketed-join amortization split (round-2 verdict, Wrong #3): the
-    // bucketed_join_revenue query entry memoizes its layout, so min-of-2
-    // already reports the amortized join; this section times the two halves
-    // explicitly — layout_sec is the pre-paid exchange, join_sec is what
-    // every subsequent join on the key costs.
-    val bucketed = if (only.isEmpty) {
-      Try {
-        import graft.operators.Scale
-        val t0 = System.nanoTime()
-        Scale.bucketTables(spark, sfDir, buckets = 8, prefix = "graft_bjr_split")
-        val layoutSec = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        Scale.bucketedJoin(spark, "graft_bjr_split").count()
-        val joinSec = (System.nanoTime() - t1) / 1e9
-        s""","bucketed":{"layout_sec":${r3(layoutSec)},"join_sec":${r3(joinSec)}}"""
-      } match {
-        case Success(j) => j
-        case Failure(e) => s""","bucketed":{"err":"${jsonEscape(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}"}"""
-      }
-    } else ""
-    // Compaction-aware prelude (round-7 verdict, stretch #7): when the
-    // corpus ships as one row group per file — Spark cannot split a row
-    // group, so every scan is single-task no matter what
-    // maxPartitionBytes says — measure the layout tax as a first-class
-    // artifact column: Io.compact the corpus to /tmp and run ONE extra
-    // (JVM-warm) pass there. raw_total is the warm raw pass, the
-    // apples-to-apples comparand; the headline value stays min-of-2 on
-    // the corpus AS SHIPPED.
-    val relayout = if (only.isEmpty) {
-      Try {
-        val tables = Seq("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings")
-        val stats = tables.map(t =>
-          graft.sources.Io.rowGroupStats(spark, s"$sfDir/$t.parquet"))
-        val files = stats.map(_._1).sum
-        val groups = stats.map(_._2).sum
-        if (groups == files) {
-          val dst = s"/tmp/graft_bench_relayout_$tsMs"
-          val t0 = System.nanoTime()
-          tables.foreach(t =>
-            graft.sources.Io.compact(spark, s"$sfDir/$t.parquet", s"$dst/$t.parquet"))
-          val compactSec = (System.nanoTime() - t0) / 1e9
-          releaseHeap(spark)
-          val pass = runOnce(dst)
-          releaseHeap(spark)
-          Try {
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              new java.net.URI(dst), spark.sparkContext.hadoopConfiguration)
-            fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-          }
-          s""","relayout":{"files":$files,"compact_sec":${r3(compactSec)},"total":${r3(pass.map(_._2.sec).sum)},"raw_total":${r3(warm.map(_._2.sec).sum)}}"""
-        } else ""
-      } match {
-        case Success(j) => j
-        case Failure(e) => s""","relayout":{"err":"${jsonEscape(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}"}"""
-      }
-    } else ""
     // Key order matters: the driver archives a 2000-char TAIL slice of
-    // this line, so the most-load-bearing keys go LAST — streaming
-    // telemetry, bucketed/relayout sections, errors, loadavg (the
-    // load-contamination telemetry, cut from both r6 and r7 artifacts),
-    // the per-query seconds array, then the headline total. Only the
-    // full-name query map sits ahead of them: at 98+ queries it cannot
-    // fit the window regardless, and the `q` array + sorted names
-    // carries the same data. (r8: the streaming block — cut from every
-    // driver artifact through r7 — moved behind the map too; it fits
-    // the tail alongside q/loadavg/value.)
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"queries":$qs$streaming$bucketed$relayout$errJson,"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"pass_totals":$passTotals,"q":$qArr,"value":$total}""")
+    // this line, so the most-load-bearing keys go LAST — errors,
+    // calib_sec, loadavg (the load-contamination telemetry, cut from both
+    // r6 and r7 artifacts), the per-pass totals, the per-query seconds
+    // array, then the headline total. Only the full-name query map sits
+    // ahead of them: at 98+ queries it cannot fit the window regardless,
+    // and the `q` array + sorted names carries the same data.
+    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","ts_ms":$tsMs,"queries":$qs$errJson,"calib_sec":${r3(calibSec)},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"pass_totals":$passTotals,"q":$qArr,"value":$total}""")
     // COMPACT ECHO LINE (round-16 verdict, Next #2): every BENCH_r*.json
     // the driver has archived carries `parsed: null`, because the driver
     // parses only a 2000-char TAIL slice of stdout and the full contract

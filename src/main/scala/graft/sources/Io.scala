@@ -77,29 +77,6 @@ object Io {
     n
   }
 
-  /** Layout probe: (parquet file count, total row-group count) for a
-    * table path (single file or directory of part files). `rowGroups ==
-    * files` is the one-row-group-per-file signature of an
-    * externally-produced monolithic corpus — the layout [[compact]]
-    * exists to fix, and the trigger for Bench's relayout prelude. Footer
-    * reads only; no data pages touched. */
-  def rowGroupStats(spark: SparkSession, path: String): (Int, Int) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), hconf)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val files =
-      (if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
-       else Seq(fs.getFileStatus(p)))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val groups = files.map { s =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(s.getPath, hconf))
-      try rdr.getFooter.getBlocks.size
-      finally rdr.close()
-    }.sum
-    (files.size, groups)
-  }
-
   /** Skipping probe: per row group, the footer (min, max) of an INT64
     * column — what a stats-aware scan consults to decide whether the
     * group can satisfy a range predicate at all. The measured half of the
